@@ -32,10 +32,6 @@ import graft.functions.F
   */
 object Dedup {
 
-  /** Scratch paths with a registered exit-time cleanup hook (q88). */
-  private val scratchHooked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** Sorted distinct k-shingle hashes per document: (doc_id, sh_arr, n).
     * ShingleHashes is one codegen'd pass per row — tokenize, hash each
     * shingle to 64 bits, sort, dedupe — replacing an interpreted
@@ -1576,25 +1572,12 @@ object Dedup {
     * oracle), without recomputing the stored side's signatures. */
   def q88(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    // Scratch path scoped by applicationId (concurrent sessions — e.g.
-    // Verify and Bench on one machine — never share or race on it) and
-    // by an md5 of the dataset path (distinct datasets can't collide the
-    // way String.hashCode can).
-    val dTag = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_sigstore_" +
-      s"${s.sparkContext.applicationId}_$dTag"
+    val path = Scratch.dir(s, d, "sigstore")
     // The per-app scratch path may hold this query's prior run (Bench
     // repeats queries) — the contract is "store = exactly the even
-    // ids", so reset. A best-effort shutdown hook (registered once per
-    // path) cleans the per-app directory up on JVM exit so repeated
-    // runs don't accumulate scratch stores in tmpdir.
+    // ids", so reset.
     val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(hp, true)
-    if (Dedup.scratchHooked.add(path)) {
-      sys.addShutdownHook { try fs.delete(hp, true) catch { case _: Exception => () } }
-    }
+    hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
     writeSignatureStore(docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", path)
     incrementalPairs(docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", path, 0.6)
   }
@@ -1611,16 +1594,10 @@ object Dedup {
     * not just a spec). */
   def q373(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    val dTag = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_sigdel_" +
-      s"${s.sparkContext.applicationId}_$dTag"
+    val path = Scratch.dir(s, d, "sigdel")
     val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(hp, true) // reset: Bench repeats queries (the q88 contract)
-    if (Dedup.scratchHooked.add(path)) {
-      sys.addShutdownHook { try fs.delete(hp, true) catch { case _: Exception => () } }
-    }
+    // reset: Bench repeats queries (the q88 contract)
+    hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
     val evens = docs.filter(col("doc_id") % 2 === 0)
     // r16 optimization (guide §2.6): the two batch builds are
     // independent (disjoint batch=a / batch=b directories) — submit

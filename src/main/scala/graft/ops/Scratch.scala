@@ -5,9 +5,14 @@ import org.apache.spark.sql.SparkSession
 /** App-scoped scratch directories for the benchmark queries that keep a
   * STANDING artifact (ANN indexes, the BPE merge table): built once per
   * (application, dataset) and reused by repeat runs — the benchmark face
-  * of "train/build once, serve forever". Collision discipline as the
-  * q88 signature store: applicationId × dataset-md5 in the name, and a
-  * shutdown hook deletes the tree on JVM exit. */
+  * of "train/build once, serve forever". The q88/q373 signature stores
+  * live here too and reset their dir on every call. Collision
+  * discipline: the applicationId in the name (concurrent sessions —
+  * e.g. Verify and Bench on one machine — never share or race on a
+  * dir) × an md5 of the dataset path (distinct datasets can't collide
+  * the way String.hashCode can), and a best-effort shutdown hook,
+  * registered once per path, deletes the tree on JVM exit so repeated
+  * runs don't accumulate scratch stores in tmpdir. */
 private[graft] object Scratch {
   private val hooked =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()

@@ -1061,15 +1061,7 @@ object Similarity {
                         id: String, emb: String, path: String): Unit = {
     val s = corpus.sparkSession
     import s.implicits._
-    // a fresh build resets any compaction state from a previous index
-    // under the same path: the CELLS pointer and retired generations
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/CELLS"), false)
-    if (fs.exists(root))
-      fs.listStatus(root).map(_.getPath)
-        .filter(_.getName.startsWith("cells_v"))
-        .foreach(p => fs.delete(p, true))
+    new GenerationStore(s, path, "cells").resetOnFreshBuild()
     cents.zipWithIndex.map { case (c, i) => (i, c) }
       .toDF("cell", "centroid")
       .write.mode("overwrite").parquet(s"$path/centroids")
@@ -1162,24 +1154,109 @@ object Similarity {
       .parquet(s"$path/${liveCellsDir(s, path)}")
   }
 
-  /** The LIVE cells directory, resolved through the `$path/CELLS`
-    * pointer file (the manifest pattern): a missing/empty pointer means
-    * the original `cells` tree (every index writeIvfIndex produces).
-    * Compaction flips the pointer to a new generation instead of
-    * renaming directories, so there is NO window in which the index has
-    * no cells tree — the failure mode a two-rename swap has when the
-    * process dies between renames. */
-  private[graft] def liveCellsDir(s: SparkSession, path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/CELLS")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) "cells"
-    else {
-      val in = fs.open(p)
-      try {
-        val name = scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        if (name.isEmpty) "cells" else name
-      } finally in.close()
+  /** The LIVE-GENERATION RULE of the persisted list stores — the one
+    * place that names, flips and retires a store's generations. Under an
+    * index `path`, a store with base `cells` (IVF and IVF-PQ lists,
+    * partitioned by cell) or `codes` (flat PQ codes) is:
+    *   - `<base>/`: the tree every fresh build writes;
+    *   - `<base>_vN/`: generation N, published by maintenance;
+    *   - `CELLS`/`CODES`: the pointer file naming the live generation
+    *     (the manifest pattern); missing or empty means `<base>/`.
+    *
+    * [[publishNext]] writes generation N+1 in full, THEN flips the
+    * pointer (one small-file write), THEN retires. Crash-safe at every
+    * step: a death before the flip leaves the live pointer untouched
+    * (the half-written generation is garbage the next publish
+    * collects); a death after it leaves both generations on disk.
+    * Flipping a pointer instead of renaming directories means there is
+    * NO window in which the index has no live tree — the failure mode a
+    * two-rename swap has when the process dies between renames. The
+    * retire policy is the caller's:
+    *   - keep the replaced generation ([[compactIvfIndex]]): it
+    *     survives until the NEXT publish as the grace window for probes
+    *     that resolved the pointer before the flip;
+    *   - retire every generation but the new live one (the deletes):
+    *     erasure completeness outranks the reader grace window — stale
+    *     generations would keep the erased embeddings on disk, the
+    *     exact bytes a GDPR request demands gone. A lazy probe plan
+    *     resolved before such a flip can lose its files mid-scan by
+    *     design; racing readers serve through [[serveWithSelfHeal]] or
+    *     pin a VersionedStore snapshot ([[ivfTopKFromVersionedCells]]).
+    *
+    * [[resetOnFreshBuild]] points the store back at `<base>/` and
+    * retires every other generation, so a build over a path that held
+    * an index never serves a generation of the index it replaced.
+    * Concurrent maintenance of ONE build should serialize (one
+    * maintainer per build, standard for index maintenance); racing
+    * BUILDERS are safe behind the VersionedStore CAS that publishes a
+    * build in the first place (the q144/q168/q170 facades). */
+  private final class GenerationStore(s: SparkSession, path: String, base: String) {
+    private val root = new org.apache.hadoop.fs.Path(path)
+    private val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    private val pointerFile = new org.apache.hadoop.fs.Path(root, base.toUpperCase)
+
+    /** The live generation, resolved once on first use. */
+    lazy val live: String = pointer(None)
+
+    /** Write generation N+1 through `write(dirName)`, flip, retire. */
+    def publishNext(keepReplaced: Boolean)(write: String => Unit): Unit = {
+      val gen = if (live == base) 0 else live.stripPrefix(s"${base}_v").toInt
+      val next = s"${base}_v${gen + 1}"
+      write(next)
+      pointer(Some(next))
+      retire(if (keepReplaced) Set(next, live) else Set(next))
     }
+
+    def resetOnFreshBuild(): Unit = { pointer(Some(base)); retire(Set(base)) }
+
+    /** The pointer file's only reader and writer: `None` reads the live
+      * name; `Some(g)` flips to `g`, and flipping back to `<base>/`
+      * removes the file (the state a fresh build leaves). */
+    private def pointer(flipTo: Option[String]): String = flipTo match {
+      case None if !fs.exists(pointerFile) => base
+      case None =>
+        val name = graft.sources.VersionedStore.readText(fs, pointerFile).trim
+        if (name.isEmpty) base else name
+      case Some(`base`) => fs.delete(pointerFile, false); base
+      case Some(g) => graft.sources.VersionedStore.writeText(fs, pointerFile, g); g
+    }
+
+    /** The only remover of generations: every generation dir outside
+      * `keep` goes. */
+    private def retire(keep: Set[String]): Unit =
+      if (fs.exists(root))
+        fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
+          .filter(p => p.getName == base || p.getName.startsWith(s"${base}_v"))
+          .filterNot(p => keep(p.getName))
+          .foreach(fs.delete(_, true))
+  }
+
+  /** The live cells directory of an IVF or IVF-PQ store. */
+  private[graft] def liveCellsDir(s: SparkSession, path: String): String =
+    new GenerationStore(s, path, "cells").live
+
+  /** The live codes directory of a PQ store. */
+  private[graft] def liveCodesDir(s: SparkSession, path: String): String =
+    new GenerationStore(s, path, "codes").live
+
+  /** Erase `ids` from the live generation of a list store into the next
+    * one, retiring every older generation ([[GenerationStore]]). The
+    * model (centroids, codebook) stays frozen, so probing after
+    * erasure is row-identical to a store written from the survivors
+    * under the same model. Idempotent: an absent delete set publishes
+    * nothing. Returns whether a new generation was published. */
+  private def eraseFromStore(s: SparkSession, path: String, base: String,
+                             ids: DataFrame, idCol: String,
+                             partitionBy: String*): Boolean = {
+    val del = ids.select(col(idCol).cast("long").as("vid")).distinct().localCheckpoint()
+    val store = new GenerationStore(s, path, base)
+    val rows = s.read.parquet(s"$path/${store.live}")
+    if (rows.join(del, Seq("vid"), "left_semi").isEmpty) return false
+    store.publishNext(keepReplaced = false) { next =>
+      rows.join(del, Seq("vid"), "left_anti")
+        .write.mode("overwrite").partitionBy(partitionBy: _*).parquet(s"$path/$next")
+    }
+    true
   }
 
   /** Index-aware CELL COMPACTION: rewrite the cell partitions so every
@@ -1189,95 +1266,42 @@ object Similarity {
     * cell, and probe scan time goes per-file, not per-byte). The
     * rewrite repartitions on (cell, hash(vid) % filesPerCell) — each
     * (cell, slot) pair lands in one task, so a cell directory gets at
-    * most `filesPerCell` files — into a NEW generation directory, then
-    * flips the `CELLS` pointer (one small-file write) and retires
-    * generations older than the one it replaced. Crash-safe at every
-    * step: a death before the flip leaves the live pointer untouched
-    * (the half-written generation is garbage the next compaction
-    * collects); a death after it leaves both generations on disk. The
-    * previous generation survives until the NEXT compaction as a grace
-    * window for probes that resolved the pointer before the flip.
-    * Probe results are row-identical before/after (spec-pinned):
-    * compaction moves bytes, never values. Concurrent maintenance of
-    * the SAME published build should serialize (one compactor per
-    * build, standard for index maintenance); the build-level flip that
-    * publishes a store in the first place is the optimistic
-    * VersionedStore CAS (q144/q168/q170 facades), so racing BUILDERS
-    * are safe. At 100 TB, run per-cell-subset on a schedule — the
-    * shuffle moves only the cells being folded. */
+    * most `filesPerCell` files — into the next generation, published
+    * under the keep-the-replaced-generation policy of
+    * [[GenerationStore]] (write, flip, retire; the previous generation
+    * is the reader grace window until the next publish). Probe results
+    * are row-identical before/after (spec-pinned): compaction moves
+    * bytes, never values. At 100 TB, run per-cell-subset on a schedule
+    * — the shuffle moves only the cells being folded. */
   def compactIvfIndex(s: SparkSession, path: String,
                       filesPerCell: Int = 1): Unit = {
     require(filesPerCell > 0, s"filesPerCell must be positive, got $filesPerCell")
-    val live = liveCellsDir(s, path)
-    val gen = if (live == "cells") 0 else live.stripPrefix("cells_v").toInt
-    val next = s"cells_v${gen + 1}"
-    s.read.parquet(s"$path/$live")
-      .repartition(col("cell"), pmod(xxhash64(col("vid")), lit(filesPerCell.toLong)))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/$next")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val out = fs.create(new org.apache.hadoop.fs.Path(s"$path/CELLS"), true)
-    try out.write(next.getBytes("UTF-8")) finally out.close()
-    // retire every generation except the new live and its predecessor
-    fs.listStatus(new org.apache.hadoop.fs.Path(path))
-      .filter(_.isDirectory)
-      .map(_.getPath)
-      .filter(p => p.getName == "cells" || p.getName.startsWith("cells_v"))
-      .filter(p => p.getName != next && p.getName != live)
-      .foreach(p => fs.delete(p, true))
+    val store = new GenerationStore(s, path, "cells")
+    store.publishNext(keepReplaced = true) { next =>
+      s.read.parquet(s"$path/${store.live}")
+        .repartition(col("cell"), pmod(xxhash64(col("vid")), lit(filesPerCell.toLong)))
+        .write.mode("overwrite").partitionBy("cell").parquet(s"$path/$next")
+    }
   }
 
   /** ERASURE from a persisted cell store — IVF (q144) and IVF-PQ
     * (q318) share the layout: a frozen quantizer (and codebook) plus
-    * cell-partitioned lists under the CELLS generation pointer. The
-    * delete drops the erased vids from every cell list into a NEW
-    * generation directory and flips the pointer (the compactIvfIndex
-    * crash-safety discipline: a death before the flip leaves the live
-    * pointer untouched; the flip is one small-file write) — the
-    * centroids/codebook stay frozen, the q168 append convention, so
-    * probing after erasure is row-identical to an index whose cells
-    * were written from the survivors under the same model.
-    *
-    * Unlike compaction, the delete retires ALL older generations
-    * IMMEDIATELY: erasure completeness outranks the reader grace
-    * window (stale generations would keep the erased embeddings on
-    * disk — the exact bytes a GDPR request demands gone). Readers
-    * racing the erase on the same live store serve through
-    * [[ivfTopKServed]] (resolve-again-and-retry on vanished files —
-    * round 16, VERDICT r15 item 6) or pin a VersionedStore snapshot
-    * ([[ivfTopKFromVersionedCells]]); a LAZY probe plan resolved
-    * before the flip can lose its files mid-scan by design.
-    * Idempotent: an absent delete set flips nothing. Returns whether
-    * a new generation was published.
+    * cell-partitioned lists under the CELLS pointer. The erased vids
+    * drop from every cell list into the next generation, and every
+    * older generation is retired at once ([[eraseFromStore]] under the
+    * retire-all policy of [[GenerationStore]]); the centroids stay
+    * frozen, the q168 append convention. Readers racing the erase on
+    * the same live store serve through [[ivfTopKServed]]
+    * (resolve-again-and-retry on vanished files — round 16, VERDICT r15
+    * item 6). Returns whether a new generation was published.
     *
     * Scale (100 TB): one anti-join over the cell lists (partition-
     * parallel, the erased set broadcast when small) and a partitioned
     * rewrite — O(store cells touched), no retraining, no re-encode,
     * and the probe path is untouched. */
   def deleteFromIvfIndex(s: SparkSession, path: String, ids: DataFrame,
-                         idCol: String): Boolean = {
-    val del = ids.select(col(idCol).cast("long").as("vid")).distinct()
-      .localCheckpoint()
-    val live = liveCellsDir(s, path)
-    val cells = s.read.parquet(s"$path/$live")
-    if (cells.join(del, Seq("vid"), "left_semi").isEmpty) return false
-    val gen = if (live == "cells") 0 else live.stripPrefix("cells_v").toInt
-    val next = s"cells_v${gen + 1}"
-    cells.join(del, Seq("vid"), "left_anti")
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/$next")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val out = fs.create(new org.apache.hadoop.fs.Path(s"$path/CELLS"), true)
-    try out.write(next.getBytes("UTF-8")) finally out.close()
-    // physical erasure: every generation but the new live goes now
-    fs.listStatus(new org.apache.hadoop.fs.Path(path))
-      .filter(_.isDirectory)
-      .map(_.getPath)
-      .filter(p => p.getName == "cells" || p.getName.startsWith("cells_v"))
-      .filter(_.getName != next)
-      .foreach(p => fs.delete(p, true))
-    true
-  }
+                         idCol: String): Boolean =
+    eraseFromStore(s, path, "cells", ids, idCol, "cell")
 
   /** q375: IVF probe AFTER ERASURE (round 15; VERDICT r14 item 1) —
     * the index is built (trained + assigned) over the FULL corpus,
@@ -1290,7 +1314,7 @@ object Similarity {
   def q375(s: SparkSession, d: String): DataFrame = {
     val (c, _) = corpusAndQueries(s, d)
     val dir = graft.sources.VersionedStore.resolveOrBuild(
-      s, indexScratch(s, d, "ivfdel"))(
+      s, Scratch.dir(s, d, "ivfdel"))(
       p => writeIvfIndex(c, "vec_id", "embedding", p))
     deleteFromIvfIndex(s, dir, c.filter(col("vec_id") % 2 === 1), "vec_id")
     val q = c.filter(col("vec_id") % 2 === 0 &&
@@ -1298,46 +1322,45 @@ object Similarity {
     ivfTopKFromIndex(s, dir, q, "vec_id", "embedding")
   }
 
-  /** Probe a persisted IVF index: no training, no corpus re-encode —
-    * the centroid model stays bounded (k-row collect under
-    * `literalCellsMax` cells, broadcast-joined centroid table above —
-    * see [[LiteralCellsMax]]), query probes are computed query-side
-    * only, and the index scan is statically pruned to the probed cells
-    * (the probe set is ≤ probes·|queries| ints, collected once — the
-    * bounded-driver-scalar pattern). */
-  /** Shared probe derivation for every persisted-index read path
-    * (file-directory and versioned): the per-query probed-cell fanout
-    * (literal-path cellOrder or the join fallback) plus the distinct
-    * probed set — ONE definition, so a probe-discipline change can
-    * never split the spec-pinned row-identical read paths. */
-  private def probedQueries(centsDf: DataFrame, queries: DataFrame,
-                            id: String, emb: String, probes: Int,
-                            literalCellsMax: Int): (DataFrame, Array[Int]) = {
+  /** The ONE probe body of every persisted IVF read path (file directory
+    * and versioned), so a probe-discipline change can never split the
+    * spec-pinned row-identical read paths: per-query probed cells from
+    * the frozen centroids (literal-path cellOrder or the join fallback),
+    * the distinct probed set collected once (≤ probes·|queries| ints —
+    * the bounded-driver-scalar pattern), then a scan of only
+    * `cell IN (probed)` of the lists. `cells` is by-name: the lists
+    * resolve after the probe set is collected. */
+  private def probeCells(centsDf: DataFrame, cells: => DataFrame, queries: DataFrame,
+                         id: String, emb: String, k: Int, probes: Int,
+                         literalCellsMax: Int): DataFrame = {
     val q = centroidsUpTo(centsDf, literalCellsMax) match {
       case Some(cents) =>
-        queries
-          .select(col(id).as("query_id"), col(emb).as("q_emb"),
-            explode(slice(cellOrder(cents, col(emb)), 1, probes)).as("cell"))
+        queries.select(col(id).as("query_id"), col(emb).as("q_emb"),
+          explode(slice(cellOrder(cents, col(emb)), 1, probes)).as("cell"))
       case None => probesByJoin(centsDf, queries, id, emb, probes)
     }
-    (q, q.select(col("cell")).distinct().collect().map(_.getInt(0)))
-  }
-
-  def ivfTopKFromIndex(s: SparkSession, path: String, queries: DataFrame,
-                       id: String, emb: String, k: Int = TopK,
-                       probes: Int = IvfProbes,
-                       literalCellsMax: Int = LiteralCellsMax): DataFrame = {
-    val centsDf = s.read.parquet(s"$path/centroids")
-    val (q, probed) =
-      probedQueries(centsDf, queries, id, emb, probes, literalCellsMax)
-    val c = s.read.parquet(s"$path/${liveCellsDir(s, path)}")
-      .filter(col("cell").isin(probed.map(Integer.valueOf): _*))
+    val probed = q.select(col("cell")).distinct().collect().map(_.getInt(0))
+    val c = cells.filter(col("cell").isin(probed.map(Integer.valueOf): _*))
     val cos = F.cosineSim(col("q_emb"), col("c_emb"))
     rankTopK(
       c.join(broadcast(q), Seq("cell"))
         .filter(col("vid") =!= col("query_id"))
         .select(col("query_id"), col("vid").as("neighbor_id"), cos.as("cos")), k)
   }
+
+  /** Probe a persisted IVF index: no training, no corpus re-encode —
+    * the centroid model stays bounded (k-row collect under
+    * `literalCellsMax` cells, broadcast-joined centroid table above —
+    * see [[LiteralCellsMax]]), query probes are computed query-side
+    * only, and the scan of the live cells is statically pruned to the
+    * probed cell partitions ([[probeCells]]). */
+  def ivfTopKFromIndex(s: SparkSession, path: String, queries: DataFrame,
+                       id: String, emb: String, k: Int = TopK,
+                       probes: Int = IvfProbes,
+                       literalCellsMax: Int = LiteralCellsMax): DataFrame =
+    probeCells(s.read.parquet(s"$path/centroids"),
+      s.read.parquet(s"$path/${liveCellsDir(s, path)}"),
+      queries, id, emb, k, probes, literalCellsMax)
 
   /** IVF probe against VERSIONED cells (round 11; the streaming-ingest
     * read path): same probe discipline as [[ivfTopKFromIndex]] — query
@@ -1356,18 +1379,10 @@ object Similarity {
                                 cellsRoot: String, version: Int,
                                 queries: DataFrame, id: String, emb: String,
                                 k: Int = TopK, probes: Int = IvfProbes,
-                                literalCellsMax: Int = LiteralCellsMax): DataFrame = {
-    val centsDf = s.read.parquet(centsPath)
-    val (q, probed) =
-      probedQueries(centsDf, queries, id, emb, probes, literalCellsMax)
-    val c = graft.sources.VersionedStore.read(s, cellsRoot, version)
-      .filter(col("cell").isin(probed.map(Integer.valueOf): _*))
-    val cos = F.cosineSim(col("q_emb"), col("c_emb"))
-    rankTopK(
-      c.join(broadcast(q), Seq("cell"))
-        .filter(col("vid") =!= col("query_id"))
-        .select(col("query_id"), col("vid").as("neighbor_id"), cos.as("cos")), k)
-  }
+                                literalCellsMax: Int = LiteralCellsMax): DataFrame =
+    probeCells(s.read.parquet(centsPath),
+      graft.sources.VersionedStore.read(s, cellsRoot, version),
+      queries, id, emb, k, probes, literalCellsMax)
 
   /** SERVE-DURING-ERASE SELF-HEAL (round 16; VERDICT r15 item 6): the
     * generation-pointer stores flip CELLS/CODES and then IMMEDIATELY
@@ -1434,6 +1449,7 @@ object Similarity {
     val s = corpus.sparkSession
     import s.implicits._
     val codebook = trainPqCodebook(corpus, id, emb, m, kCent, iters)
+    new GenerationStore(s, path, "codes").resetOnFreshBuild()
     Seq(Tuple1(codebook)).toDF("codebook")
       .write.mode("overwrite").parquet(s"$path/codebook")
     corpus.select(col(id).as("vid"),
@@ -1442,54 +1458,17 @@ object Similarity {
       .write.mode("overwrite").parquet(s"$path/codes")
   }
 
-  /** The live PQ codes directory, resolved through the `$path/CODES`
-    * pointer file (the liveCellsDir convention for the flat codes
-    * table): missing/empty pointer = the original `codes` tree every
-    * writePqIndex build produces; [[deleteFromPqIndex]] flips it. */
-  private[graft] def liveCodesDir(s: SparkSession, path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/CODES")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) "codes"
-    else {
-      val in = fs.open(p)
-      try {
-        val name = scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        if (name.isEmpty) "codes" else name
-      } finally in.close()
-    }
-  }
-
   /** ERASURE from the persisted PQ index (round 15; VERDICT r14 item
-    * 1): drop the erased vids' 8-byte codes into a new generation
-    * under the CODES pointer (the [[deleteFromIvfIndex]] discipline —
-    * pointer flip after a complete write, older generations retired
-    * immediately for physical completeness), codebook frozen. The ADC
-    * sweep after erasure runs over exactly the survivors' codes, so
-    * no erased id can reach the shortlist or the rerank. Idempotent;
-    * returns whether a new generation was published. */
+    * 1): the erased vids' 8-byte codes drop into the next generation
+    * under the CODES pointer, every older generation retired at once
+    * for physical completeness (the [[deleteFromIvfIndex]] discipline,
+    * [[eraseFromStore]]), codebook frozen. The ADC sweep after erasure
+    * runs over exactly the survivors' codes, so no erased id can reach
+    * the shortlist or the rerank. Returns whether a new generation was
+    * published. */
   def deleteFromPqIndex(s: SparkSession, path: String, ids: DataFrame,
-                        idCol: String): Boolean = {
-    val del = ids.select(col(idCol).cast("long").as("vid")).distinct()
-      .localCheckpoint()
-    val live = liveCodesDir(s, path)
-    val codes = s.read.parquet(s"$path/$live")
-    if (codes.join(del, Seq("vid"), "left_semi").isEmpty) return false
-    val gen = if (live == "codes") 0 else live.stripPrefix("codes_v").toInt
-    val next = s"codes_v${gen + 1}"
-    codes.join(del, Seq("vid"), "left_anti")
-      .write.mode("overwrite").parquet(s"$path/$next")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val out = fs.create(new org.apache.hadoop.fs.Path(s"$path/CODES"), true)
-    try out.write(next.getBytes("UTF-8")) finally out.close()
-    fs.listStatus(new org.apache.hadoop.fs.Path(path))
-      .filter(_.isDirectory)
-      .map(_.getPath)
-      .filter(p => p.getName == "codes" || p.getName.startsWith("codes_v"))
-      .filter(_.getName != next)
-      .foreach(p => fs.delete(p, true))
-    true
-  }
+                        idCol: String): Boolean =
+    eraseFromStore(s, path, "codes", ids, idCol)
 
   /** Probe a persisted PQ index: the codebook is a one-row collect, the
     * ADC sweep runs over the stored 8-byte codes (no re-encode), and
@@ -1681,6 +1660,7 @@ object Similarity {
     import s.implicits._
     val (cents, codebook, codes) =
       ivfPqModel(corpus, id, emb, cells, m, kCent, trainIters, pqIters)
+    new GenerationStore(s, path, "cells").resetOnFreshBuild()
     cents.zipWithIndex.map { case (c, i) => (i, c) }
       .toDF("cell", "centroid")
       .write.mode("overwrite").parquet(s"$path/centroids")
@@ -1868,16 +1848,11 @@ object Similarity {
   def q318(s: SparkSession, d: String): DataFrame = {
     val (c, q) = corpusAndQueries(s, d)
     val dir = graft.sources.VersionedStore.resolveOrBuild(
-      s, indexScratch(s, d, "ivfpqidx"))(
+      s, Scratch.dir(s, d, "ivfpqidx"))(
       p => writeIvfPqIndex(c, "vec_id", "embedding", p))
     val rerank = corpusScaledRerank(c)
     ivfPqTopKFromIndex(s, dir, c, q, "vec_id", "embedding", rerank = rerank)
   }
-
-  /** App-scoped scratch path for the benchmark index queries — see
-    * [[Scratch.dir]] (shared with the q142 standing tokenizer). */
-  private def indexScratch(s: SparkSession, d: String, kind: String): String =
-    Scratch.dir(s, d, kind)
 
   /** q144: IVF probe through the PERSISTED index — build once (skipped
     * when this app already wrote it: the repeat-run face of a standing
@@ -1889,7 +1864,7 @@ object Similarity {
     // (concurrent builders safe, loser discards its staging) instead of
     // a bare _SUCCESS probe
     val dir = graft.sources.VersionedStore.resolveOrBuild(
-      s, indexScratch(s, d, "ivfidx"))(
+      s, Scratch.dir(s, d, "ivfidx"))(
       p => writeIvfIndex(c, "vec_id", "embedding", p))
     ivfTopKFromIndex(s, dir, q, "vec_id", "embedding")
   }
@@ -1899,7 +1874,7 @@ object Similarity {
   def q145(s: SparkSession, d: String): DataFrame = {
     val (c, q) = corpusAndQueries(s, d)
     val dir = graft.sources.VersionedStore.resolveOrBuild(
-      s, indexScratch(s, d, "pqidx"))(
+      s, Scratch.dir(s, d, "pqidx"))(
       p => writePqIndex(c, "vec_id", "embedding", p))
     val rerank = corpusScaledRerank(c)
     pqTopKFromIndex(s, dir, c, q, "vec_id", "embedding", rerank = rerank)
@@ -1918,7 +1893,7 @@ object Similarity {
     // _GRAFT_APPEND_DONE sentinel (cells/_SUCCESS lands after step 1
     // and would mask a failed append as a complete half-empty index)
     val dir = graft.sources.VersionedStore.resolveOrBuild(
-      s, indexScratch(s, d, "ivfapp")) { p =>
+      s, Scratch.dir(s, d, "ivfapp")) { p =>
       writeIvfIndex(c.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", p)
       appendToIvfIndex(c.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", p)
     }
@@ -1933,7 +1908,7 @@ object Similarity {
   def q170(s: SparkSession, d: String): DataFrame = {
     val (c, q) = corpusAndQueries(s, d)
     val dir = graft.sources.VersionedStore.resolveOrBuild(
-      s, indexScratch(s, d, "ivfcomp")) { p =>
+      s, Scratch.dir(s, d, "ivfcomp")) { p =>
       writeIvfIndex(c.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", p)
       appendToIvfIndex(c.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", p)
       compactIvfIndex(s, p)
@@ -2061,7 +2036,7 @@ object Similarity {
   def q189(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d)
     val dir = graft.sources.VersionedStore.resolveOrBuild(
-      s, indexScratch(s, d, "semstore"))(
+      s, Scratch.dir(s, d, "semstore"))(
       p => writeSemDedupStore(e.filter(col("vec_id") % 2 === 0),
         "vec_id", "embedding", p))
     semDedupApply(s, dir, e.filter(col("vec_id") % 2 === 1),
@@ -2795,7 +2770,7 @@ object Similarity {
     // dataset past the scale where that identity holds flips this
     // gate red BY DESIGN — the spec fails first, with remediation.
     val dir = graft.sources.VersionedStore.resolveOrBuild(
-      s, indexScratch(s, d, "nswidx"))(
+      s, Scratch.dir(s, d, "nswidx"))(
       p => writeNswIndex(e, "vec_id", "embedding", p,
         m = NswM, rounds = NswRounds, beam = NswBeam, hops = NswHops))
     labelNoiseFromKnn(
@@ -3041,7 +3016,7 @@ object Similarity {
     // the manifest then pins the matching walk budget for the serve.
     // Deployment callers use the scaled defaults instead.
     val dir = graft.sources.VersionedStore.resolveOrBuild(
-      s, indexScratch(s, d, "nswidx"))(
+      s, Scratch.dir(s, d, "nswidx"))(
       p => writeNswIndex(c, "vec_id", "embedding", p,
         m = NswM, rounds = NswRounds, beam = NswBeam, hops = NswHops))
     nswTopKFromIndex(s, dir, q, "vec_id", "embedding")
@@ -3257,7 +3232,7 @@ object Similarity {
   def q336(s: SparkSession, d: String): DataFrame = {
     val (c, q) = corpusAndQueries(s, d)
     val dir = graft.sources.VersionedStore.resolveOrBuild(
-      s, indexScratch(s, d, "hnswidx"))(
+      s, Scratch.dir(s, d, "hnswidx"))(
       p => writeHnswIndex(c, "vec_id", "embedding", p,
         m = NswM, rounds = NswRounds))
     hnswTopKFromIndex(s, dir, q, "vec_id", "embedding")
@@ -3392,7 +3367,7 @@ object Similarity {
     val e = Tables.embeddings(s, d)
     val (c, q) = corpusAndQueries(s, d)
     val dir = graft.sources.VersionedStore.resolveOrBuild(
-      s, indexScratch(s, d, "hnswidx"))(
+      s, Scratch.dir(s, d, "hnswidx"))(
       p => writeHnswIndex(c, "vec_id", "embedding", p,
         m = NswM, rounds = NswRounds))
     hnswFilteredTopKFromIndex(s, dir, q, "vec_id", "embedding", "label",
@@ -3770,7 +3745,7 @@ object Similarity {
     * leak-free on every layer at once. */
   def q397(s: SparkSession, d: String): DataFrame = {
     val (c, _) = corpusAndQueries(s, d)
-    val root = indexScratch(s, d, "hnswdel")
+    val root = Scratch.dir(s, d, "hnswdel")
     graft.sources.VersionedStore.resolveOrBuild(s, root)(
       p => writeHnswIndex(c, "vec_id", "embedding", p,
         m = NswM, rounds = NswRounds))
@@ -3794,7 +3769,7 @@ object Similarity {
     * without minting redundant versions. */
   def q366(s: SparkSession, d: String): DataFrame = {
     val (c, _) = corpusAndQueries(s, d)
-    val root = indexScratch(s, d, "nswdel")
+    val root = Scratch.dir(s, d, "nswdel")
     graft.sources.VersionedStore.resolveOrBuild(s, root)(
       p => writeNswIndex(c, "vec_id", "embedding", p,
         m = NswM, rounds = NswRounds, beam = NswBeam, hops = NswHops))
@@ -3814,7 +3789,7 @@ object Similarity {
     val e = Tables.embeddings(s, d)
     val (c, q) = corpusAndQueries(s, d)
     val dir = graft.sources.VersionedStore.resolveOrBuild(
-      s, indexScratch(s, d, "nswidx"))(
+      s, Scratch.dir(s, d, "nswidx"))(
       p => writeNswIndex(c, "vec_id", "embedding", p,
         m = NswM, rounds = NswRounds, beam = NswBeam, hops = NswHops))
     nswFilteredTopKFromIndex(s, dir, q, "vec_id", "embedding", "label",

@@ -22,7 +22,11 @@ import graft.functions.CosineSimilarity
   * The centroid model (bounded: the literal-path cell count) and the
   * live cells directory are snapshotted at registration — rule firings
   * plan against driver-held state and run ZERO Spark jobs; re-register
-  * after an index compaction flips the cells pointer. */
+  * after anything flips the CELLS pointer. A compaction keeps the
+  * snapshotted generation until the next compaction; an erase
+  * (Similarity.deleteFromIvfIndex) or a rebuild in place replaces it
+  * at once, so a stale registration scans a vanished or rewritten
+  * directory. */
 object AnnIndexRegistry {
   case class Index(basePath: String, indexRoot: String, idCol: String,
                    embCol: String, cents: Seq[Seq[Float]], cellsDir: String,

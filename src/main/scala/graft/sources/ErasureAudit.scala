@@ -21,10 +21,13 @@ import org.apache.spark.sql.functions._
   *     SOURCES, and graph NEIGHBOR endpoints (a vector can vanish from
   *     vectors/ yet survive as someone's neighbor — the exact torn
   *     state the CAS delete prevents and this audit would catch)
-  *   - IVF cell store / PQ code store: the LIVE generation only (the
-  *     CELLS/CODES pointer — retired generations are physically
-  *     deleted by the erasure contract, and the audit reads through
-  *     the pointer exactly like the probe path)
+  *   - IVF cell store / PQ code store: the LIVE generation only,
+  *     resolved through the CELLS/CODES pointer exactly like the probe
+  *     path. An erase retires every other generation at once, so no
+  *     erased row survives outside the live one; a compaction keeps
+  *     the generation it replaced as a reader grace window, which
+  *     holds only rows its live successor also holds (the generation
+  *     rule: Similarity's GenerationStore)
   *   - KMV store (current CAS version): the erased KEYS hashed with
   *     the store's own md5 convention and probed against every day's
   *     sketch minima — a KMV sketch is one-way, but the hashes it

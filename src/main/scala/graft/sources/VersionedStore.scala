@@ -64,7 +64,7 @@ object VersionedStore {
   private def fsFor(s: SparkSession, root: String): FileSystem =
     new Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
 
-  private def readText(fs: FileSystem, p: Path): String = {
+  private[graft] def readText(fs: FileSystem, p: Path): String = {
     val in = fs.open(p)
     try {
       val out = new java.io.ByteArrayOutputStream()
@@ -75,7 +75,7 @@ object VersionedStore {
     } finally in.close()
   }
 
-  private def writeText(fs: FileSystem, p: Path, text: String): Unit = {
+  private[graft] def writeText(fs: FileSystem, p: Path, text: String): Unit = {
     val o = fs.create(p, true)
     try o.write(text.getBytes(StandardCharsets.UTF_8)) finally o.close()
   }

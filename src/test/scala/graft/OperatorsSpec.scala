@@ -6116,6 +6116,14 @@ class OperatorsSpec extends SparkSpec {
       "delete-then-append must restore exactly the re-ingested ids")
   }
 
+  /** The `<base>` and `<base>_vN` generation dirs of a list store. */
+  private def generationDirs(idx: String, base: String): Seq[String] = {
+    val root = new org.apache.hadoop.fs.Path(idx)
+    root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(root).filter(_.isDirectory).map(_.getPath.getName)
+      .filter(n => n == base || n.startsWith(s"${base}_v")).toSeq
+  }
+
   test("pq-codes and ivfpq-cells erasure: codebook frozen, leak-free, " +
        "idempotent") {
     import org.apache.spark.sql.functions.col
@@ -6137,6 +6145,11 @@ class OperatorsSpec extends SparkSpec {
     assert(pqGot.collect().forall(_.getLong(2) % 2 == 0),
       "PQ probe returned an erased id")
     assert(!Similarity.deleteFromPqIndex(spark, pq, odd, "vec_id"))
+    // physically complete: only the live generation dir remains on disk
+    val pqLive = Similarity.liveCodesDir(spark, pq)
+    assert(pqLive.startsWith("codes_v"), s"CODES pointer names $pqLive")
+    assert(generationDirs(pq, "codes") == Seq(pqLive),
+      s"stale generations hold erased codes: ${generationDirs(pq, "codes")}")
     // IVF-PQ: shares the cell-store layout, so the IVF delete applies
     val ipq = java.nio.file.Files
       .createTempDirectory("graft-ivfpqdel").toString + "/idx"
@@ -6144,11 +6157,52 @@ class OperatorsSpec extends SparkSpec {
     assert(Similarity.deleteFromIvfIndex(spark, ipq, odd, "vec_id"))
     assert(spark.read.parquet(s"$ipq/${Similarity.liveCellsDir(spark, ipq)}")
       .select("vid").collect().forall(_.getLong(0) % 2 == 0))
+    val ipqLive = Similarity.liveCellsDir(spark, ipq)
+    assert(ipqLive.startsWith("cells_v"), s"CELLS pointer names $ipqLive")
+    assert(generationDirs(ipq, "cells") == Seq(ipqLive),
+      s"stale generations hold erased codes: ${generationDirs(ipq, "cells")}")
     val ipqGot = Similarity.ivfPqTopKFromIndex(spark, ipq, e,
       e.filter(col("vec_id") < 10), "vec_id", "embedding")
     assert(ipqGot.collect().forall(_.getLong(2) % 2 == 0),
       "IVF-PQ probe returned an erased id")
     assert(!Similarity.deleteFromIvfIndex(spark, ipq, odd, "vec_id"))
+  }
+
+  test("rebuild in place after an erase serves the new build, not the " +
+       "erased generation (PQ and IVF-PQ)") {
+    import org.apache.spark.sql.functions.col
+    val e = Tables.embeddings(spark, sf)
+    val odd = e.filter(col("vec_id") % 2 === 1)
+    // the second corpus: same vectors under ids no first-build row has
+    val shift = 1000000L
+    val fresh = e.select((col("vec_id") + shift).as("vec_id"), col("embedding"))
+    val q = fresh.filter(col("vec_id") < shift + 10)
+    def assertOnlyFresh(rows: Array[org.apache.spark.sql.Row], what: String): Unit = {
+      assert(rows.length == 10 * Similarity.TopK,
+        s"$what: ${rows.length} rows, want ${10 * Similarity.TopK}")
+      assert(rows.forall(_.getLong(2) >= shift),
+        s"$what served an id of the replaced build")
+    }
+    // ---- PQ (CODES pointer) ----
+    val pq = java.nio.file.Files
+      .createTempDirectory("graft-pqrebuild").toString + "/idx"
+    Similarity.writePqIndex(e, "vec_id", "embedding", pq)
+    assert(Similarity.deleteFromPqIndex(spark, pq, odd, "vec_id"))
+    Similarity.writePqIndex(fresh, "vec_id", "embedding", pq)
+    assertOnlyFresh(Similarity.pqTopKFromIndex(spark, pq, fresh, q,
+      "vec_id", "embedding").collect(), "PQ rebuild")
+    assert(Similarity.liveCodesDir(spark, pq) == "codes")
+    assert(generationDirs(pq, "codes") == Seq("codes"))
+    // ---- IVF-PQ (CELLS pointer, erased through the IVF delete) ----
+    val ipq = java.nio.file.Files
+      .createTempDirectory("graft-ivfpqrebuild").toString + "/idx"
+    Similarity.writeIvfPqIndex(e, "vec_id", "embedding", ipq)
+    assert(Similarity.deleteFromIvfIndex(spark, ipq, odd, "vec_id"))
+    Similarity.writeIvfPqIndex(fresh, "vec_id", "embedding", ipq)
+    assertOnlyFresh(Similarity.ivfPqTopKFromIndex(spark, ipq, fresh, q,
+      "vec_id", "embedding").collect(), "IVF-PQ rebuild")
+    assert(Similarity.liveCellsDir(spark, ipq) == "cells")
+    assert(generationDirs(ipq, "cells") == Seq("cells"))
   }
 
   test("serve-during-erase self-heal: a probe plan resolved before the " +
