@@ -1531,13 +1531,43 @@ case class QuantCellOrder(child: Expression, centsQ: Seq[Seq[Long]], scale: Long
   @transient private lazy val cq: Array[Array[Long]] = centsQ.map(_.toArray).toArray
 
   private def compute(emb: ArrayData): Array[Int] = {
-    val k = cq.length
     val q = new Array[Long](emb.numElements())
     var t = 0
     while (t < q.length) {
-      q(t) = math.floor(emb.getFloat(t).toDouble * scale).toLong
+      q(t) = QuantCellOrder.quantize(emb.getFloat(t), scale)
       t += 1
     }
+    QuantCellOrder.argsort(q, cq)
+  }
+
+  override protected def nullSafeEval(input: Any): Any =
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      compute(input.asInstanceOf[ArrayData]))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("quantCellOrder", this, classOf[QuantCellOrder].getName)
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.order($c);")
+  }
+
+  /** Called from generated code. */
+  def order(emb: ArrayData): org.apache.spark.sql.catalyst.util.GenericArrayData =
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(compute(emb))
+
+  override protected def withNewChildInternal(newChild: Expression): QuantCellOrder =
+    copy(child = newChild)
+}
+
+object QuantCellOrder {
+  /** The grid: floor(x·scale). */
+  def quantize(x: Float, scale: Long): Long = math.floor(x.toDouble * scale).toLong
+
+  /** THE cell argsort — every cell id ordered by (integer squared L2
+    * from the quantized embedding `q` to each quantized centroid, cell
+    * id). The expression's eval and codegen call it per row; the
+    * driver calls it through [[order]] for batches it already holds
+    * (the IVF probe set, the ANN navigator's rewrite). */
+  def argsort(q: Array[Long], cq: Array[Array[Long]]): Array[Int] = {
+    val k = cq.length
     val d = new Array[Long](k)
     var j = 0
     while (j < k) {
@@ -1563,21 +1593,10 @@ case class QuantCellOrder(child: Expression, centsQ: Seq[Seq[Long]], scale: Long
     idx
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      compute(input.asInstanceOf[ArrayData]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("quantCellOrder", this, classOf[QuantCellOrder].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.order($c);")
-  }
-
-  /** Called from generated code. */
-  def order(emb: ArrayData): org.apache.spark.sql.catalyst.util.GenericArrayData =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(compute(emb))
-
-  override protected def withNewChildInternal(newChild: Expression): QuantCellOrder =
-    copy(child = newChild)
+  /** The argsort of a float embedding held on the driver. */
+  def order(emb: scala.collection.Seq[Float], cq: Array[Array[Long]],
+            scale: Long): Array[Int] =
+    argsort(emb.iterator.map(quantize(_, scale)).toArray, cq)
 }
 
 /** Pure-integer squared L2 between two float arrays on the quantized

@@ -1,8 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import graft.Tables
 import graft.functions.Cols._
 import graft.functions.F
@@ -138,7 +140,7 @@ object Similarity {
   val QuantScale = 16384L
 
   private[graft] def quantizeVal(x: Float): Long =
-    math.floor(x.toDouble * QuantScale).toLong
+    graft.functions.QuantCellOrder.quantize(x, QuantScale)
 
   /** Exact long→float dequantization onto the grid. */
   private def dequantize(q: Long): Float = (q.toDouble / QuantScale).toFloat
@@ -169,6 +171,14 @@ object Similarity {
     * assignment). */
   private def cellOrder(cents: Seq[Seq[Float]], emb: Column): Column =
     F.quantCellOrder(emb, quantizeCents(cents), QuantScale)
+
+  /** [[cellOrder]] on the driver, for embeddings it already holds: the
+    * same QuantCellOrder argsort, the centroids quantized once. */
+  private[graft] def cellOrderOf(cents: Seq[Seq[Float]])
+      : scala.collection.Seq[Float] => Array[Int] = {
+    val cq = quantizeCents(cents).map(_.toArray).toArray
+    emb => graft.functions.QuantCellOrder.order(emb, cq, QuantScale)
+  }
 
   /** The assigned cell: nearest quantized centroid. */
   private def bestCellId(cents: Seq[Seq[Float]], emb: Column): Column =
@@ -1070,65 +1080,151 @@ object Similarity {
       .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")
   }
 
-  /** Past this cell count, centroid assignment stops riding the plan as
-    * literal arrays (10⁴ structs in one projection blows codegen and
-    * planning time) and becomes a broadcast join against the centroid
-    * TABLE — same assignment, same tie-break, a plan whose size is
-    * independent of the cell count. A 100 TB index wants √n ≈ 10⁴–10⁵
-    * cells, so the join path is the scale path; the literal path stays
-    * for small indexes where one codegen'd argmax beats a join. */
+  /** The literal-path bound: an index of at most this many cells keeps
+    * its centroids on the driver (in the [[IvfModels]] cache) and
+    * assigns and probes with them as plan literals — one codegen'd
+    * argsort per row, or none at all for a query batch already on the
+    * driver. Past it, assignment and probing become a broadcast join
+    * against the centroid TABLE (10⁴ structs in one projection blows
+    * codegen and planning time) — same assignment, same tie-break, a
+    * plan whose size is independent of the cell count. A 100 TB index
+    * wants √n ≈ 10⁴–10⁵ cells, so the join path is the scale path. A
+    * caller's `literalCellsMax` can lower the bound, never raise it:
+    * the cache keeps no larger model. */
   val LiteralCellsMax = 256
 
-  /** Per-query nearest-`probes` cells via a broadcast join against the
-    * centroid table. Tie-break mirrors the literal path's struct order
-    * exactly (cos desc, then CELL DESC — array_max/reverse(sort_array)
-    * break equal cosines toward the larger index), so both paths select
-    * identical probe sets (spec-pinned). The rank window partitions by
-    * query — per-partition work is one query's |cells| scores. */
-  private def probesByJoin(centsDf: DataFrame, queries: DataFrame,
-                           id: String, emb: String, probes: Int): DataFrame =
-    queries.select(col(id).as("query_id"), col(emb).as("q_emb"))
-      .join(broadcast(centsDf.select(col("cell"), col("centroid"))))
-      .select(col("query_id"), col("q_emb"), col("cell"),
+  /** Per-row nearest-`probes` cells via a broadcast join against the
+    * centroid table, for `batch` = (qrow, query_id, q_emb) with a
+    * distinct `qrow` per query row. Tie-break mirrors the literal
+    * path's argsort exactly ((quantized L2, cell) asc), so both paths
+    * select identical probe sets (spec-pinned). The rank window
+    * partitions by query row — per-partition work is one query's
+    * |cells| scores, and a duplicated query id is probed once per row,
+    * as on the literal path. */
+  private def probesByJoin(centsDf: DataFrame, batch: DataFrame,
+                           probes: Int): DataFrame =
+    batch.join(broadcast(centsDf.select(col("cell"), col("centroid"))))
+      .select(col("qrow"), col("query_id"), col("q_emb"), col("cell"),
         F.quantL2(col("q_emb"), col("centroid"), QuantScale).as("dq"))
       .withColumn("rk", row_number().over(
-        Window.partitionBy(col("query_id"))
+        Window.partitionBy(col("qrow"))
           .orderBy(col("dq").asc, col("cell").asc)))
       .where(col("rk") <= probes)
       .select(col("query_id"), col("q_emb"), col("cell"))
 
-  /** The small-index path probe: ONE bounded read of the centroid
-    * table — take(max+1) either returns the whole model (≤ max rows,
-    * which IS the collect the literal path needs) or proves the index
-    * is large without counting it. Never a separate count job on the
-    * serving path. */
-  private def centroidsUpTo(centsDf: DataFrame,
-                            literalCellsMax: Int): Option[Seq[Seq[Float]]] = {
-    val rows = centsDf.take(literalCellsMax + 1)
-    if (rows.length > literalCellsMax) None
+  /** The IVF MODEL CACHE: one process-wide map from an index's
+    * `centroids/` directory (fully qualified) to what every request
+    * against the index would otherwise re-read with Spark jobs — the
+    * centroids, kept only at ≤ [[LiteralCellsMax]] cells, and the schema
+    * of the index's list store.
+    *
+    * The quantizer is frozen: append, erase and compaction never
+    * rewrite `centroids/`; only a build does. So an entry is valid
+    * while the directory's listing — part-file names, lengths and
+    * modification times — is unchanged, and every lookup checks that
+    * with one `listStatus`, a filesystem call, not a Spark job. Spark
+    * puts the writing job's UUID in part-file names, so a rebuild in
+    * place always misses. The listing is taken BEFORE the model is
+    * read, so a build racing a fill leaves a stale stamp that the next
+    * lookup misses, never a stale model behind a fresh stamp.
+    *
+    * Entries fill lazily, on first use; at most `MaxIndexes` are kept,
+    * the least recently used evicted. A constant, not a setting: a
+    * published build gets a fresh path (VersionedStore.publishDir), so
+    * a process serves only the few latest of its indexes. */
+  private object IvfModels {
+    private val MaxIndexes = 8
+
+    final class Model(val stamp: Seq[(String, Long, Long)],
+                      val cents: Option[Seq[Seq[Float]]]) {
+      /** The list store's schema, filled on first read of the lists:
+        * every generation (append, erase, compaction) keeps it. */
+      @volatile var listSchema: Option[StructType] = None
+      @volatile var used = 0L
+    }
+
+    private val models = new java.util.concurrent.ConcurrentHashMap[String, Model]()
+    private val clock = new java.util.concurrent.atomic.AtomicLong()
+
+    def apply(s: SparkSession, centsDir: String): Model = {
+      val dir = new org.apache.hadoop.fs.Path(centsDir)
+      val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
+      val key = fs.makeQualified(dir).toString
+      val stamp = fs.listStatus(dir).toSeq
+        .map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).sorted
+      val model = Option(models.get(key)).filter(_.stamp == stamp).getOrElse {
+        val fresh = new Model(stamp, centroidsUpTo(s.read.parquet(centsDir)))
+        fresh.used = clock.incrementAndGet()
+        models.put(key, fresh)
+        while (models.size > MaxIndexes) {
+          val lru = models.entrySet.toArray(Array.empty[java.util.Map.Entry[String, Model]])
+            .minBy(_.getValue.used)
+          models.remove(lru.getKey, lru.getValue)
+        }
+        fresh
+      }
+      model.used = clock.incrementAndGet()
+      model
+    }
+  }
+
+  /** The small-index model: ONE bounded read of the centroid table —
+    * take(max+1) either returns the whole model (≤ max rows) or proves
+    * the index is large without counting it. */
+  private def centroidsUpTo(centsDf: DataFrame): Option[Seq[Seq[Float]]] = {
+    val rows = centsDf.take(LiteralCellsMax + 1)
+    if (rows.length > LiteralCellsMax) None
     else Some(rows.sortBy(_.getInt(0)).map(_.getSeq[Float](1).toSeq).toSeq)
   }
 
-  /** Delta rows encoded against the stored quantizer: literal
-    * integer-argmin assignment under `literalCellsMax` cells,
-    * broadcast-join argmin (min_by over (quantized L2, cell) — the
-    * same tie-break as QuantCellOrder) above it. */
-  private[graft] def assignCells(centsDf: DataFrame, delta: DataFrame,
+  /** The literal-path centroids of the model, if it is within
+    * `literalCellsMax` cells. */
+  private def literalCents(model: IvfModels.Model,
+                           literalCellsMax: Int): Option[Seq[Seq[Float]]] =
+    model.cents.filter(_.length <= literalCellsMax)
+
+  /** The centroids of the IVF index at `path` from the model cache;
+    * None past [[LiteralCellsMax]] cells. */
+  private[graft] def indexCentroids(s: SparkSession, path: String): Option[Seq[Seq[Float]]] =
+    IvfModels(s, s"$path/centroids").cents
+
+  /** The live list generation of the IVF index at `path`, read with the
+    * model cache's schema (no schema-inference job). */
+  private[graft] def liveCells(s: SparkSession, path: String): DataFrame =
+    readLists(s, path, IvfModels(s, s"$path/centroids"))
+
+  private def readLists(s: SparkSession, path: String,
+                        model: IvfModels.Model): DataFrame = {
+    val dir = s"$path/${liveCellsDir(s, path)}"
+    val schema = model.listSchema.getOrElse {
+      val inferred = s.read.parquet(dir).schema
+      model.listSchema = Some(inferred)
+      inferred
+    }
+    s.read.schema(schema).parquet(dir)
+  }
+
+  /** Delta rows encoded against the stored quantizer in `centsDir`
+    * (through the model cache): literal integer-argmin assignment under
+    * `literalCellsMax` cells, broadcast-join argmin (min_by over
+    * (quantized L2, cell) — the same tie-break as QuantCellOrder) above
+    * it. */
+  private[graft] def assignCells(centsDir: String, delta: DataFrame,
                           id: String, emb: String,
                           literalCellsMax: Int): DataFrame = {
-    val small = centroidsUpTo(centsDf, literalCellsMax)
-    if (small.isDefined) {
-      val cents = small.get
-      delta.select(col(id).as("vid"), col(emb).as("c_emb"),
-        bestCellId(cents, col(emb)).as("cell"))
-    } else {
-      delta.select(col(id).as("vid"), col(emb).as("c_emb"))
-        .join(broadcast(centsDf.select(col("cell"), col("centroid"))))
-        .groupBy(col("vid"))
-        .agg(first(col("c_emb")).as("c_emb"),
-          min(struct(F.quantL2(col("c_emb"), col("centroid"), QuantScale).as("d"),
-            col("cell").as("i"))).as("best"))
-        .select(col("vid"), col("c_emb"), col("best.i").as("cell"))
+    val s = delta.sparkSession
+    literalCents(IvfModels(s, centsDir), literalCellsMax) match {
+      case Some(cents) =>
+        delta.select(col(id).as("vid"), col(emb).as("c_emb"),
+          bestCellId(cents, col(emb)).as("cell"))
+      case None =>
+        delta.select(col(id).as("vid"), col(emb).as("c_emb"))
+          .join(broadcast(s.read.parquet(centsDir).select(col("cell"), col("centroid"))))
+          .groupBy(col("vid"))
+          .agg(first(col("c_emb")).as("c_emb"),
+            min(struct(F.quantL2(col("c_emb"), col("centroid"), QuantScale).as("d"),
+              col("cell").as("i"))).as("best"))
+          .select(col("vid"), col("c_emb"), col("best.i").as("cell"))
     }
   }
 
@@ -1148,8 +1244,7 @@ object Similarity {
                        path: String,
                        literalCellsMax: Int = LiteralCellsMax): Unit = {
     val s = delta.sparkSession
-    assignCells(s.read.parquet(s"$path/centroids"), delta, id, emb,
-        literalCellsMax)
+    assignCells(s"$path/centroids", delta, id, emb, literalCellsMax)
       .write.mode("append").partitionBy("cell")
       .parquet(s"$path/${liveCellsDir(s, path)}")
   }
@@ -1324,23 +1419,43 @@ object Similarity {
 
   /** The ONE probe body of every persisted IVF read path (file directory
     * and versioned), so a probe-discipline change can never split the
-    * spec-pinned row-identical read paths: per-query probed cells from
-    * the frozen centroids (literal-path cellOrder or the join fallback),
-    * the distinct probed set collected once (≤ probes·|queries| ints —
-    * the bounded-driver-scalar pattern), then a scan of only
-    * `cell IN (probed)` of the lists. `cells` is by-name: the lists
-    * resolve after the probe set is collected. */
-  private def probeCells(centsDf: DataFrame, cells: => DataFrame, queries: DataFrame,
+    * spec-pinned row-identical read paths. The query batch comes to the
+    * driver first — no Spark job for a local batch, one bounded job
+    * otherwise: queries are broadcast-sized by the operator's contract.
+    * A query with a null embedding gets no probes; a duplicated query
+    * id is probed once per row. Under `literalCellsMax` cells, each
+    * query's first `probes` cells come from the cached centroids
+    * through the driver-side argsort ([[cellOrderOf]]), and the
+    * (query_id, q_emb, cell) rows join the lists as a local relation;
+    * above it the rows come from the centroid-table join
+    * ([[probesByJoin]]) and their distinct cells are collected once.
+    * Either way the scan reads only `cell IN (probed)` of the lists — a
+    * static partition filter. `cells` is by-name: the lists resolve
+    * after the probe set is known. */
+  private def probeCells(model: IvfModels.Model, centsDir: String,
+                         cells: => DataFrame, queries: DataFrame,
                          id: String, emb: String, k: Int, probes: Int,
                          literalCellsMax: Int): DataFrame = {
-    val q = centroidsUpTo(centsDf, literalCellsMax) match {
+    val s = queries.sparkSession
+    val qs = queries.select(col(id).as("query_id"), col(emb).as("q_emb"))
+    val batch = qs.collect().filterNot(_.isNullAt(1)).toSeq
+    def local(rows: Seq[Row], schema: StructType): DataFrame =
+      s.createDataFrame(rows.asJava, schema)
+    val (q, probed) = literalCents(model, literalCellsMax) match {
       case Some(cents) =>
-        queries.select(col(id).as("query_id"), col(emb).as("q_emb"),
-          explode(slice(cellOrder(cents, col(emb)), 1, probes)).as("cell"))
-      case None => probesByJoin(centsDf, queries, id, emb, probes)
+        val order = cellOrderOf(cents)
+        val rows = batch.flatMap(r => order(r.getSeq[Float](1)).take(probes)
+          .map(cell => Row(r.get(0), r.get(1), cell)))
+        (local(rows, qs.schema.add("cell", IntegerType, nullable = false)),
+          rows.map(_.getInt(2)).distinct)
+      case None =>
+        val numbered = local(
+          batch.zipWithIndex.map { case (r, i) => Row(i, r.get(0), r.get(1)) },
+          StructType(StructField("qrow", IntegerType, nullable = false) +: qs.schema.fields))
+        val q = probesByJoin(s.read.parquet(centsDir), numbered, probes)
+        (q, q.select(col("cell")).distinct().collect().map(_.getInt(0)).toSeq)
     }
-    val probed = q.select(col("cell")).distinct().collect().map(_.getInt(0))
-    val c = cells.filter(col("cell").isin(probed.map(Integer.valueOf): _*))
+    val c = cells.filter(col("cell").isin(probed.sorted.map(Integer.valueOf): _*))
     val cos = F.cosineSim(col("q_emb"), col("c_emb"))
     rankTopK(
       c.join(broadcast(q), Seq("cell"))
@@ -1348,19 +1463,23 @@ object Similarity {
         .select(col("query_id"), col("vid").as("neighbor_id"), cos.as("cos")), k)
   }
 
-  /** Probe a persisted IVF index: no training, no corpus re-encode —
-    * the centroid model stays bounded (k-row collect under
-    * `literalCellsMax` cells, broadcast-joined centroid table above —
-    * see [[LiteralCellsMax]]), query probes are computed query-side
-    * only, and the scan of the live cells is statically pruned to the
-    * probed cell partitions ([[probeCells]]). */
+  /** Probe a persisted IVF index: no training, no corpus re-encode.
+    * The model comes from the [[IvfModels]] cache — centroids under
+    * `literalCellsMax` cells, the broadcast-joined centroid table above
+    * (see [[LiteralCellsMax]]) — query probes are computed on the
+    * driver, and the scan of the live cells, read with the cached
+    * schema, is statically pruned to the probed cell partitions
+    * ([[probeCells]]). A request after the first on the same index
+    * runs only the probe query's own Spark jobs. */
   def ivfTopKFromIndex(s: SparkSession, path: String, queries: DataFrame,
                        id: String, emb: String, k: Int = TopK,
                        probes: Int = IvfProbes,
-                       literalCellsMax: Int = LiteralCellsMax): DataFrame =
-    probeCells(s.read.parquet(s"$path/centroids"),
-      s.read.parquet(s"$path/${liveCellsDir(s, path)}"),
+                       literalCellsMax: Int = LiteralCellsMax): DataFrame = {
+    val centsDir = s"$path/centroids"
+    val model = IvfModels(s, centsDir)
+    probeCells(model, centsDir, readLists(s, path, model),
       queries, id, emb, k, probes, literalCellsMax)
+  }
 
   /** IVF probe against VERSIONED cells (round 11; the streaming-ingest
     * read path): same probe discipline as [[ivfTopKFromIndex]] — query
@@ -1380,7 +1499,7 @@ object Similarity {
                                 queries: DataFrame, id: String, emb: String,
                                 k: Int = TopK, probes: Int = IvfProbes,
                                 literalCellsMax: Int = LiteralCellsMax): DataFrame =
-    probeCells(s.read.parquet(centsPath),
+    probeCells(IvfModels(s, centsPath), centsPath,
       graft.sources.VersionedStore.read(s, cellsRoot, version),
       queries, id, emb, k, probes, literalCellsMax)
 
@@ -1977,7 +2096,7 @@ object Similarity {
   def semDedupApply(s: SparkSession, path: String, batch: DataFrame,
                     id: String, emb: String,
                     tau: Double = SemTau): DataFrame = {
-    val assigned = assignCells(s.read.parquet(s"$path/centroids"), batch,
+    val assigned = assignCells(s"$path/centroids", batch,
       id, emb, LiteralCellsMax)
     val stored = s.read.parquet(s"$path/kept")
       .select(col("cell"), col("e").as("o_e"))

@@ -19,34 +19,30 @@ import graft.functions.CosineSimilarity
   * brute-force top-k cosine queries are served from the index's probed
   * cells — the documented IVF recall trade, never a silent default.
   *
-  * The centroid model (bounded: the literal-path cell count) and the
-  * live cells directory are snapshotted at registration — rule firings
-  * plan against driver-held state and run ZERO Spark jobs; re-register
-  * after anything flips the CELLS pointer. A compaction keeps the
-  * snapshotted generation until the next compaction; an erase
-  * (Similarity.deleteFromIvfIndex) or a rebuild in place replaces it
-  * at once, so a stale registration scans a vanished or rewritten
-  * directory. */
+  * The centroid model (bounded: the literal-path cell count) is taken
+  * from the IVF model cache at registration and held here: the
+  * quantizer is frozen, so only a rebuild in place changes it, and a
+  * rebuilt index is re-registered. The lists are not held: each rule
+  * firing resolves the live cells generation (a pointer read) and reads
+  * it with the cached schema, so appends, erases and compactions of the
+  * index are served without re-registering, and a firing runs no Spark
+  * job while the index's model is cached. */
 object AnnIndexRegistry {
   case class Index(basePath: String, indexRoot: String, idCol: String,
-                   embCol: String, cents: Seq[Seq[Float]], cellsDir: String,
-                   probes: Int)
+                   embCol: String, cents: Seq[Seq[Float]], probes: Int)
 
   @volatile private var indexes: List[Index] = Nil
 
   def register(s: SparkSession, basePath: String, indexRoot: String,
                idCol: String, embCol: String,
                probes: Int = graft.ops.Similarity.IvfProbes): Unit = {
-    val rows = s.read.parquet(s"$indexRoot/centroids")
-      .take(graft.ops.Similarity.LiteralCellsMax + 1)
-    require(rows.length <= graft.ops.Similarity.LiteralCellsMax,
+    val cents = graft.ops.Similarity.indexCentroids(s, indexRoot)
+    require(cents.isDefined,
       s"index $indexRoot exceeds the literal-path cell bound; the " +
         "navigator snapshot would not be driver-sized")
-    val cents = rows.sortBy(_.getInt(0)).map(_.getSeq[Float](1).toSeq).toSeq
-    val cellsDir = graft.ops.Similarity.liveCellsDir(s, indexRoot)
     synchronized {
-      indexes = Index(basePath, indexRoot, idCol, embCol, cents,
-        cellsDir, probes) :: indexes
+      indexes = Index(basePath, indexRoot, idCol, embCol, cents.get,
+        probes) :: indexes
     }
   }
 
@@ -58,11 +54,12 @@ object AnnIndexRegistry {
   * .as(c)).orderBy(desc(c)).limit(k)` — the brute-force ANN shape —
   * over a REGISTERED base table into the same expression over only the
   * index's probed cells. The probe-cell set is computed AT PLANNING
-  * TIME on the driver (integer-grid argmin against the registration's
-  * centroid snapshot — the exact QuantCellOrder arithmetic, so the
-  * pruning agrees bit-for-bit with every other quantizer consumer);
-  * the rewritten plan scans `cell IN (probed)` partitions of the index
-  * instead of the corpus — partition-pruned at the source. Sort and
+  * TIME on the driver (the QuantCellOrder argsort itself, through
+  * Similarity.cellOrderOf, against the registration's centroids, so
+  * the pruning agrees bit-for-bit with every other quantizer
+  * consumer); the rewritten plan scans `cell IN (probed)` partitions
+  * of the index's live cells generation instead of the corpus —
+  * partition-pruned at the source. Sort and
   * limit stay: approximation enters ONLY through cell pruning, which
   * is precisely IVF's recall trade (spec-pinned ≥ the q192 recall
   * floor). Non-matching plans — filtered scans, extra projections,
@@ -92,29 +89,14 @@ case class AnnIndexRewrite(session: SparkSession) extends Rule[LogicalPlan] {
         ix.basePath).toUri.getPath || p.endsWith("/" + ix.basePath))
     }
 
-  /** Driver-side probe-cell selection: quantize (floor(x·2¹⁴)) and
-    * argsort integer squared L2 with the (distance, cell) tie-break —
-    * QuantCellOrder's arithmetic verbatim. */
-  private def probeCells(cents: Seq[Seq[Float]], q: Seq[Float],
-                         probes: Int): Seq[Int] = {
-    val s = graft.ops.Similarity.QuantScale
-    val qq = q.map(f => math.floor(f.toDouble * s).toLong).toArray
-    cents.zipWithIndex.map { case (c, i) =>
-      // a dimension mismatch means a stale registration (index built
-      // from an older embedding version) — surface it, never truncate
-      require(c.length == qq.length,
-        s"query dim ${qq.length} != index centroid dim ${c.length} — " +
-          "re-register the index for the current embedding version")
-      var acc = 0L
-      var t = 0
-      val n = math.min(qq.length, c.length)
-      while (t < n) {
-        val d = qq(t) - math.floor(c(t).toDouble * s).toLong
-        acc += d * d
-        t += 1
-      }
-      (acc, i)
-    }.sortBy(identity).take(probes).map(_._2)
+  /** The first `probes` cells of the query vector. */
+  private def probeCells(ix: AnnIndexRegistry.Index, q: Array[Float]): Seq[Int] = {
+    // a dimension mismatch means a stale registration (index built
+    // from an older embedding version) — surface it, never truncate
+    ix.cents.foreach(c => require(c.length == q.length,
+      s"query dim ${q.length} != index centroid dim ${c.length} — " +
+        "re-register the index for the current embedding version"))
+    graft.ops.Similarity.cellOrderOf(ix.cents)(q).take(ix.probes).toSeq
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan transform {
@@ -138,23 +120,22 @@ case class AnnIndexRewrite(session: SparkSession) extends Rule[LogicalPlan] {
         case al @ Alias(CosineSimilarity(e: AttributeReference,
             Literal(v: ArrayData, _)), _)
             if e.name == ix.embCol && al.exprId == cosAttr.exprId =>
-          (v.toFloatArray.toSeq, al)
+          (v.toFloatArray, al)
         case al @ Alias(CosineSimilarity(Literal(v: ArrayData, _),
             e: AttributeReference), _)
             if e.name == ix.embCol && al.exprId == cosAttr.exprId =>
-          (v.toFloatArray.toSeq, al)
+          (v.toFloatArray, al)
       }
     } yield (ix, idAttr, qvec, cosAlias)
 
     matched.fold(orig) { case (ix, idAttr, qvec, cosAlias) =>
       import org.apache.spark.sql.functions.{col, typedlit}
-      val probed = probeCells(ix.cents, qvec, ix.probes)
-      val probe = session.read
-        .parquet(s"${ix.indexRoot}/${ix.cellsDir}")
+      val probed = probeCells(ix, qvec)
+      val probe = graft.ops.Similarity.liveCells(session, ix.indexRoot)
         .filter(col("cell").isin(probed.map(Integer.valueOf): _*))
         .select(col("vid"),
           graft.functions.F.cosineSim(col("c_emb"),
-            typedlit(qvec)).as("cos"))
+            typedlit(qvec.toSeq)).as("cos"))
         .orderBy(col("cos").desc)
         .limit(k)
       val newPlan = probe.queryExecution.analyzed

@@ -223,20 +223,17 @@ object Streaming {
     * pruning. Replays are the usual at-least-once trade: one redundant
     * append version, duplicate vid rows for the replayed batch —
     * dedup is the downstream keep-best stage's job (same contract as
-    * ingestStream). At deployment, re-register the ANN navigator
-    * after each commit the way compaction re-registers after a
-    * pointer flip (AnnIndexRegistry snapshots driver state at
-    * registration). */
+    * ingestStream). The centroids come from the IVF model cache
+    * (Similarity.assignCells): the first batch reads `centsPath`, later
+    * batches only check its listing. */
   def ivfIngestStream(vectors: DataFrame, centsPath: String,
                       cellsRoot: String, id: String, emb: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     vectors.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          val cents = s.read.parquet(centsPath)
           val assigned = graft.ops.Similarity.assignCells(
-            cents, batch.toDF(), id, emb,
+            centsPath, batch.toDF(), id, emb,
             graft.ops.Similarity.LiteralCellsMax).sort(col("cell"))
           graft.sources.VersionedStore.commit(assigned, cellsRoot,
             overwrite = false)

@@ -3041,6 +3041,86 @@ class OperatorsSpec extends SparkSpec {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
   }
 
+  /** An IVF index over the test embeddings in a fresh temp dir. */
+  private def freshIvfIndex(corpus: org.apache.spark.sql.DataFrame): String = {
+    val path = java.nio.file.Files.createTempDirectory("graft-ivfcache").toString + "/idx"
+    Similarity.writeIvfIndex(corpus, "vec_id", "embedding", path)
+    path
+  }
+
+  /** `rows` as a local (driver-held) query batch. */
+  private def localQueries(rows: Seq[(Long, Option[Seq[Float]])]): org.apache.spark.sql.DataFrame = {
+    import SparkTestSession.spark.implicits._
+    rows.toDF("vec_id", "embedding")
+  }
+
+  private def firstVectors(df: org.apache.spark.sql.DataFrame,
+                           n: Int): Seq[(Long, Option[Seq[Float]])] =
+    df.orderBy(col("vec_id")).limit(n).collect().toSeq
+      .map(r => (r.getLong(0), Some(r.getSeq[Float](1).toSeq)))
+
+  private def probeRows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Int, Long, Long)] =
+    df.collect().toSeq
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).sorted
+
+  test("a warm IVF index probe of a local batch runs at most 3 Spark jobs") {
+    val e = Tables.embeddings(spark, sf).select("vec_id", "embedding")
+    val idx = freshIvfIndex(e)
+    val q = localQueries(firstVectors(e, 8))
+    def probe() = Similarity.ivfTopKFromIndex(spark, idx, q, "vec_id", "embedding")
+      .collect()
+    val cold = probe() // the first request fills the model cache
+    val sc = spark.sparkContext
+    val group = s"warm-ivf-probe-${System.nanoTime()}"
+    sc.setJobGroup(group, "warm IVF probe")
+    val warm = try probe() finally sc.clearJobGroup()
+    org.apache.spark.ListenerBusDrain(sc)
+    val jobs = sc.statusTracker.getJobIdsForGroup(group)
+    info(s"warm probe: ${jobs.length} Spark jobs")
+    assert(jobs.length <= 3,
+      s"a warm probe ran ${jobs.length} Spark jobs; only the probe query's own 3 may run")
+    assert(warm.map(_.toSeq).toSet == cold.map(_.toSeq).toSet)
+    assert(warm.length == 8 * Similarity.TopK)
+  }
+
+  test("IVF model cache: a rebuild in place misses the cache and serves the new corpus") {
+    val e = Tables.embeddings(spark, sf).select("vec_id", "embedding")
+    val shift = 1000000L
+    val other = e.filter(col("vec_id") % 3 === 0)
+      .select((col("vec_id") + shift).as("vec_id"), col("embedding"))
+    val p = freshIvfIndex(e)
+    assert(Similarity.ivfTopKFromIndex(spark, p, localQueries(firstVectors(e, 8)),
+      "vec_id", "embedding").collect().nonEmpty)
+    val oldCents = Similarity.indexCentroids(spark, p)
+    Similarity.writeIvfIndex(other, "vec_id", "embedding", p) // rebuild in place
+    val q = localQueries(firstVectors(other, 8))
+    val got = probeRows(Similarity.ivfTopKFromIndex(spark, p, q, "vec_id", "embedding"))
+    val fresh = freshIvfIndex(other)
+    val want = probeRows(Similarity.ivfTopKFromIndex(spark, fresh, q, "vec_id", "embedding"))
+    assert(Similarity.indexCentroids(spark, p) != oldCents,
+      "the rebuilt index must not serve the replaced centroids")
+    assert(Similarity.indexCentroids(spark, p) == Similarity.indexCentroids(spark, fresh))
+    assert(got.nonEmpty && got == want,
+      "a probe after a rebuild in place must equal a probe of the same corpus built fresh")
+    assert(got.forall(_._3 >= shift), "the rebuilt index served an id of the old corpus")
+  }
+
+  test("IVF index probe: a null-embedding query and a duplicated query id " +
+       "return the in-memory ivfTopK rows (literal and join path)") {
+    val e = Tables.embeddings(spark, sf).select("vec_id", "embedding")
+    val idx = freshIvfIndex(e)
+    val vs = firstVectors(e, 3)
+    val q = localQueries(Seq(vs(0), (vs(1)._1, None), vs(2), vs(2)))
+    val want = probeRows(Similarity.ivfTopK(e, q, "vec_id", "embedding"))
+    assert(want.nonEmpty && !want.exists(_._1 == vs(1)._1))
+    val literal = probeRows(Similarity.ivfTopKFromIndex(spark, idx, q,
+      "vec_id", "embedding"))
+    assert(literal == want, "literal path diverges from the in-memory ivfTopK")
+    val joined = probeRows(Similarity.ivfTopKFromIndex(spark, idx, q,
+      "vec_id", "embedding", literalCellsMax = 0))
+    assert(joined == want, "join path diverges from the in-memory ivfTopK")
+  }
+
   test("interpolation survives value×gap products beyond Long.MaxValue") {
     import SparkTestSession.spark.implicits._
     // 4e18 cents × 1e6 µs gap = 4e24 — a raw long multiply wraps.

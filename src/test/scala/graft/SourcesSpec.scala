@@ -860,6 +860,43 @@ class SourcesSpec extends SparkSpec {
     assert(planOf().contains("embeddings.parquet"))
   }
 
+  test("ANN navigator: after an erase the registered index serves the new live generation") {
+    import graft.plans.AnnIndexRegistry
+    import graft.functions.F
+    import graft.ops.Similarity
+    val basePath = s"$sf/embeddings.parquet"
+    val idxPath = tmp("annidx-erase")
+    val corpus = spark.read.parquet(basePath)
+    val qvec = corpus.orderBy(col("vec_id")).limit(1)
+      .collect().head.getSeq[Float](1).toSeq
+    def shape(df: org.apache.spark.sql.DataFrame) = df
+      .select(col("vec_id"),
+        F.cosineSim(col("embedding"), typedlit(qvec)).as("cos"))
+      .orderBy(col("cos").desc).limit(10)
+    def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.collect().map(r => (r.getLong(0),
+        math.floor(r.getDouble(1) * 10000 + 0.5).toLong)).toSet
+    // a filtered scan is never rewritten: the brute force over survivors
+    val survivors = rows(shape(corpus.filter(col("vec_id") % 2 === 0)))
+    Similarity.writeIvfIndex(corpus, "vec_id", "embedding", idxPath)
+    try {
+      // probes ≥ cells: every cell probed, so the served rows are exact
+      AnnIndexRegistry.register(spark, basePath, idxPath,
+        "vec_id", "embedding", probes = 32)
+      assert(Similarity.deleteFromIvfIndex(spark, idxPath,
+        corpus.filter(col("vec_id") % 2 === 1), "vec_id"))
+      val live = Similarity.liveCellsDir(spark, idxPath)
+      assert(live.startsWith("cells_v"), s"CELLS pointer names $live")
+      val served = shape(spark.read.parquet(basePath))
+      val plan = served.queryExecution.executedPlan.toString
+      assert(plan.contains(s"/out/$live") && !plan.contains("embeddings.parquet"),
+        s"the rewritten plan must scan the live generation $live:\n$plan")
+      val got = rows(served)
+      assert(got.forall(_._1 % 2 == 0), s"an erased id was served: $got")
+      assert(got == survivors, "an all-cells probe must equal the survivors' brute force")
+    } finally AnnIndexRegistry.clear()
+  }
+
   test("materialized cube rewrite: covered aggregates read the cube, exactly") {
     import graft.plans.CubeRegistry
     val basePath = s"$sf/lineitem.parquet"
