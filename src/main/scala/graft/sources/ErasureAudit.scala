@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   *
   * Surfaces audited per store (every id-bearing table, not just the
   * primary one — a leak hides in the SECONDARY tables):
-  *   - signature store: arrays/ AND band-bucket postings
+  *   - signature store: arrays/ AND the band postings in buckets/
   *   - BM25 index (current CAS version): docstats AND postings
   *   - SemDeDup store (current CAS version): kept/ representatives
   *   - NSW/HNSW graph store (current CAS version): vectors/, graph
@@ -65,7 +65,7 @@ object ErasureAudit {
   private def erased(ids: DataFrame, idCol: String): DataFrame =
     ids.select(col(idCol).cast("long").as("__erased_id")).distinct()
 
-  /** arrays/ + band-bucket postings of the MinHash signature store. */
+  /** arrays/ + buckets/ (band postings) of the MinHash signature store. */
   def auditSignatureStore(s: SparkSession, path: String,
                           ids: DataFrame, idCol: String): DataFrame = {
     val del = erased(ids, idCol)

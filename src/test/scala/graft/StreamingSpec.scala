@@ -291,6 +291,32 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("streaming near-dedup on a fresh store path: the first batch pairs within itself and seeds the store") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft-neardedup-fresh").toString
+    val (store, pairs) = (s"$dir/store", s"$dir/pairs") // no store written yet
+    def doc(prefix: String, last: String): String =
+      (1 to 49).map(i => s"$prefix$i").mkString(" ") + " " + last
+    val in = MemoryStream[(Long, String)]
+    val q = Streaming.nearDedupStream(in.toDF().toDF("doc_id", "text"),
+      "doc_id", "text", store, pairs, 0.6).start()
+    try {
+      // Batch 1 meets an empty store: only its within-batch pair.
+      in.addData((200L, doc("w", "iota")),
+                 (201L, doc("w", "kappa")),
+                 (202L, doc("z", "eight")))
+      q.processAllAvailable()
+      // Batch 2: near-dup of batch 1's unrelated doc, found through the
+      // store batch 1 created.
+      in.addData((300L, doc("z", "nine")))
+      q.processAllAvailable()
+      val got = spark.read.parquet(pairs)
+        .select("doc_a", "doc_b").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(got == Set((200L, 201L), (202L, 300L)), s"got $got")
+    } finally q.stop()
+  }
+
   test("near-dedup replay: batch's own store partition is excluded, pairs stay exact") {
     // An at-least-once engine can re-run a micro-batch AFTER its store
     // write landed. The replayed pair search must not see the batch's
