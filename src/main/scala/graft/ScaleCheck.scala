@@ -105,8 +105,8 @@ object ScaleCheck {
     // chosen budget pinned in the store's params manifest) probed by
     // the manifest-reading FromIndex defaults. At the 20k one-decade
     // point the oracle-pinned fixed constants collapse to 0.08 recall
-    // (graph quality, not walk budget — DiagAnn), which is THE
-    // finding this check exists to catch; the scaled default restores
+    // (graph quality, not walk budget — measured in round 12), which is
+    // THE finding this check exists to catch; the scaled default restores
     // ≥0.9 (measured r12: 1.000 @ 2k, 0.950 @ 20k).
     val rGraphFixed = recall(ops.Similarity.q250(spark, sfDir))
     val (c, q) = ops.Similarity.corpusAndQueries(spark, sfDir)

@@ -139,49 +139,6 @@ object ScaleGen {
     if ((r / (2 * dim)) % 2 == 1) reverse(negated) else negated
   }
 
-  /** CLUSTERED amplification of the embeddings table (round 15;
-    * VERDICT r14 item 3): the uniform isometry family places every
-    * replica on the same near-uniform shell — the documented HARD
-    * case for graph ANN, which is why the amended serve rule's beam
-    * grows ~linearly there. Real corpora are CLUSTERED, and the
-    * "clustered corpora need far less beam" claim in nswScaledParams
-    * was asserted, not measured. This twin makes it measurable: each
-    * replica r is the same isometry as `amplify`, SHRUNK by `alphaBp`
-    * onto a deterministic unit center for cluster r % `clusters` —
-    * same-cluster cosines land ≈ 0.9+, cross-cluster ≈ the random
-    *-center cosine (~0 ± 1/√dim), so a query's true neighbors live
-    * in ONE cluster and a graph walk has real neighborhood structure
-    * to exploit. Centers come from a splitmix64 hash of (cluster,
-    * dim) — deterministic, no RNG state. */
-  def amplifyClustered(spark: SparkSession, sfDir: String, factor: Int,
-                       clusters: Int = 32, alphaBp: Int = 3000): DataFrame = {
-    val base = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val dim = base.head().getSeq[Float](base.columns.indexOf("embedding")).length
-    require(factor <= 4 * dim,
-      s"amplifyClustered: factor $factor exceeds the isometry family " +
-        s"size 4*dim = ${4 * dim}")
-    def mix(x: Long): Long = {
-      var z = x + 0x9e3779b97f4a7c15L
-      z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-      z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-      z ^ (z >>> 31)
-    }
-    val centers: IndexedSeq[Array[Float]] = (0 until clusters).map { c =>
-      val v = Array.tabulate(dim)(d =>
-        (mix(c.toLong * 131071L + d).toDouble / Long.MaxValue).toFloat)
-      val n = math.sqrt(v.map(x => x * x.toDouble).sum).toFloat
-      v.map(_ / n)
-    }
-    val alpha = alphaBp / 10000.0f
-    (0 until factor).map { r =>
-      val cLit = array(centers(r % clusters).map(x => lit(x)): _*)
-      base.select(shift("vec_id", r).as("vec_id"),
-        zip_with(cLit, embIso(dim, r), (c, x) => c + lit(alpha) * x)
-          .as("embedding"),
-        col("label"))
-    }.reduce(_ unionByName _)
-  }
-
   val AllTables = Seq("region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 

@@ -439,9 +439,9 @@ object Dedup {
     *
     * Layout: each batch is one `batch=<tag>` partition directory under
     * `arrays/` and under `buckets/`, and holds plain parquet files —
-    * `band` is a data column, not a directory level. A batch's postings
-    * are written as a few files whose count follows the batch's size
-    * (see [[writePostings]]), never bands × slots; every batch holds
+    * `band` is a data column, not a directory level. Both sides of a
+    * batch are written as a few files whose count follows the batch's
+    * size (see [[writeBatch]]), never bands × slots; every batch holds
     * postings in every band, so a band directory level could never be
     * pruned by a read anyway. Format change: a store written with the
     * earlier `buckets/batch=<tag>/band=<n>/` layout does not read mixed
@@ -469,27 +469,33 @@ object Dedup {
                               perms: Int = MinhashPerms,
                               bands: Int = LshBands,
                               buckets: Option[DataFrame] = None): Unit = {
-    arrs.select(col("doc_id"), col("sh_arr"), col("n"))
-      .write.mode("overwrite").parquet(s"$path/arrays/batch=$batchTag")
+    writeBatch(arrs.select(col("doc_id"), col("sh_arr"), col("n")),
+      s"$path/arrays/batch=$batchTag")
     // Reuse the caller's (cached) bucket derivation when provided — the
     // MinHash signature pass is the batch's most expensive per-doc work
     // and the streaming path already computed it for the pair search.
-    writePostings(buckets.getOrElse(bandBuckets(arrs, perms, bands)),
-      s"$path/buckets/batch=$batchTag")
+    writeBatch(buckets.getOrElse(bandBuckets(arrs, perms, bands)),
+      s"$path/buckets/batch=$batchTag", PostingOrder)
   }
 
-  /** The one writer of a batch's band postings (the commit and the
-    * erase's staging rewrite). A rebalance on a deterministic hash of
-    * doc_id lets AQE size the files: a small batch coalesces to one
-    * file, a large one is split into advisory-sized partitions and keeps
-    * full write parallelism, with no knob. The key is a hash, never
-    * rand(), so a retried task rewrites the same rows. Sorting within
-    * files by (band, bh) keeps per-row-group `band` min/max statistics
-    * tight. */
-  private def writePostings(bk: DataFrame, dir: String): Unit =
-    bk.hint("rebalance", col("doc_id"))
-      .sortWithinPartitions("band", "bh")
+  /** Postings are sorted within files by (band, bh), which keeps
+    * per-row-group `band` min/max statistics tight. */
+  private val PostingOrder = Seq("band", "bh")
+
+  /** The one writer of a batch's `arrays` and `buckets` sides (the
+    * commit and the erase's staging rewrite). A rebalance on a
+    * deterministic hash of doc_id lets AQE size the files: a small
+    * batch coalesces to one file, a large one is split into
+    * advisory-sized partitions and keeps full write parallelism, with
+    * no knob. The key is a hash, never rand(), so a retried task
+    * rewrites the same rows. `sortBy` orders rows within each file. */
+  private def writeBatch(df: DataFrame, dir: String,
+                         sortBy: Seq[String] = Nil): Unit = {
+    val clustered = df.hint("rebalance", col("doc_id"))
+    (if (sortBy.isEmpty) clustered
+     else clustered.sortWithinPartitions(sortBy.map(col): _*))
       .write.mode("overwrite").parquet(dir)
+  }
 
   /** Public face of the band-bucket derivation, for callers managing
     * their own cache lifecycle around incrementalPairsFrom. */
@@ -577,11 +583,11 @@ object Dedup {
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
     val staged = affected.map { tag =>
       scala.concurrent.Future {
-        s.read.parquet(s"$path/arrays/batch=$tag")
-          .join(del, Seq("doc_id"), "left_anti")
-          .write.parquet(s"$stage/new/$tag/arrays")
-        writePostings(s.read.parquet(s"$path/buckets/batch=$tag")
-          .join(del, Seq("doc_id"), "left_anti"), s"$stage/new/$tag/buckets")
+        writeBatch(s.read.parquet(s"$path/arrays/batch=$tag")
+          .join(del, Seq("doc_id"), "left_anti"), s"$stage/new/$tag/arrays")
+        writeBatch(s.read.parquet(s"$path/buckets/batch=$tag")
+          .join(del, Seq("doc_id"), "left_anti"), s"$stage/new/$tag/buckets",
+          PostingOrder)
       }
     }
     // Finite timeout + shutdownNow on failure (the q373 build-pool
@@ -1586,7 +1592,7 @@ object Dedup {
     val docs = Tables.documents(s, d)
     val path = Scratch.dir(s, d, "sigstore")
     // The per-app scratch path may hold this query's prior run (any
-    // repeated call in one app: graft.Verify, graft.Bench, the specs) —
+    // repeated call in one app: graft.Verify, the specs) —
     // the contract is "store = exactly the even ids", so reset.
     val hp = new org.apache.hadoop.fs.Path(path)
     hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)

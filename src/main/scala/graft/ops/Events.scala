@@ -1852,7 +1852,7 @@ object Events {
   /** q175: build the persisted store, then answer a 7-day range query
     * from the STORED sketches alone (the cross-run read path). */
   def q175(s: SparkSession, d: String): DataFrame = {
-    // Build the store once per (app, dataset) — Bench repeats queries;
+    // Build the store once per (app, dataset) — a session may repeat queries;
     // the write is the "nightly job", the read is the query under test.
     // Round 10: the gate is the VersionedStore manifest CAS instead of
     // the explicit kmvStoreMarker probe — the manifest lands only after

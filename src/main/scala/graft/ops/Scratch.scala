@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
   * of "train/build once, serve forever". The q88/q373 signature stores
   * live here too and reset their dir on every call. Collision
   * discipline: the applicationId in the name (concurrent sessions —
-  * e.g. Verify and Bench on one machine — never share or race on a
+  * e.g. two Verify runs on one machine — never share or race on a
   * dir) × an md5 of the dataset path (distinct datasets can't collide
   * the way String.hashCode can), and a best-effort shutdown hook,
   * registered once per path, deletes the tree on JVM exit so repeated

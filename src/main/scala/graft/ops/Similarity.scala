@@ -2492,13 +2492,13 @@ object Similarity {
   val NswSeeds = 8    // deterministic entry points (smallest vids)
 
   // ---- routed entries (round 16; the clustered-corpus amendment) ----
-  // The fourth-decade AnnDecade measurement (SCALECHECK r16): on a
+  // The round-16 fourth-decade measurement (SCALECHECK r16): on a
   // CLUSTERED corpus where one cluster holds two isometric replica
   // groups, cross-group cosines never enter any node's top-M, so
   // NN-Descent leaves the groups DISCONNECTED — and the fixed
   // smallest-vid entry set reaches exactly one component (measured:
   // recall 0.540 at n=100k, BEAM-INDEPENDENT from 32 to 390, with the
-  // truth split 54/46 across the two components — DiagAnn truthsplit).
+  // truth split 54/46 across the two components, round 16).
   // No walk budget can cross a missing edge: the serve-side fix is to
   // START the walk in every relevant component. Routed entries pick,
   // per query, the RoutedEntries best members of a deterministic
@@ -2595,7 +2595,7 @@ object Similarity {
     // more than the halved exchange saved at this row width.
     //
     // r17 profile + two more measured dead ends (VERDICT r16 item 1,
-    // profiled FIRST via graft.StageProfile): the per-round cost sits
+    // profiled FIRST per stage in round 17): the per-round cost sits
     // in two stages — the und self-join writing the ~5 MB proposal
     // exchange (~300 ms at 2 AQE-coalesced tasks) and the
     // dedup+score+partial-topK stage reading it (~300-750 ms at 4-5
@@ -2660,15 +2660,6 @@ object Similarity {
         c.orderBy(col("vid")).limit(seeds).select(col("vid"))))
     beamWalk(graph, c, q, entries, k, beam, hops, broadcastQueries)
   }
-
-  /** Diagnostic entry into [[beamWalk]] (graft.DiagAnn). */
-  private[graft] def beamWalkDiag(graph: DataFrame, corpus: DataFrame,
-      queries: DataFrame, entries: DataFrame, hops: Int): DataFrame =
-    beamWalk(graph,
-      corpus.select(col("vec_id").as("vid"), col("embedding").as("c_emb")),
-      queries.select(col("vec_id").as("query_id"),
-        col("embedding").as("q_emb")),
-      entries, TopK, NswBeam, hops)
 
   /** The shared expand→score→prune walk over ONE adjacency table,
     * seeded by an explicit per-query entry set (query_id, vid) — the
@@ -3075,7 +3066,7 @@ object Similarity {
     * methods (no cluster structure for neighbor-of-neighbor proposals
     * to exploit). Measured at the 20k sf1 point: fixed params
     * collapse to 0.08 recall and the failure is GRAPH QUALITY, not
-    * walk budget (query-seeded walks also fail: DiagAnn); (M=32,
+    * walk budget (query-seeded walks also fail, round 12); (M=32,
     * rounds=12, beam=64, hops=6) restores 0.95. Deployment therefore
     * scales construction with corpus size — rounds grow with log n
     * (construction stays n·rounds·M² linear per round) — while the
@@ -3085,7 +3076,7 @@ object Similarity {
     if (n <= 1024) (NswM, NswRounds, NswBeam, NswHops)
     else {
       val lg = 64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, n - 1))
-      // THIRD-decade amendment (round 14; the AnnDecade measurement):
+      // THIRD-decade amendment (round 14; measured in that round):
       // at 100k near-uniform vectors the r13 rule's fixed beam 64
       // collapsed serve recall to 0.54 — and the DIAGNOSIS is the
       // OPPOSITE of the r12 failure: the graph is fine (the same
@@ -3103,7 +3094,7 @@ object Similarity {
       (32, math.max(8, lg - 3), beam, math.max(6, lg - 9))
     }
 
-  /** The deployment-mode q250 (ScaleBench/ScaleCheck member, not a
+  /** The deployment-mode q250 (ScaleCheck member, not a
     * `queries` entry — parameters adapt to corpus size, which the
     * static oracle cannot express; the q114Scaled convention). */
   def q250Scaled(s: SparkSession, d: String): DataFrame = {
@@ -3720,7 +3711,7 @@ object Similarity {
     * one, and the old version stays readable until vacuum reclaims
     * it. Idempotent at the VERSION level: a delete set with no id
     * present in the store publishes nothing and returns the current
-    * build (Bench's repeated q366 runs resolve the same version
+    * build (repeated q366 runs resolve the same version
     * instead of minting redundant ones).
     *
     * Cost is O(store) per delete batch (one filtered rewrite) — the

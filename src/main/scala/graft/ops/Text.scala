@@ -1110,9 +1110,9 @@ object Text {
     * tf) probe is cached — it feeds both dfx and the weight join; the
     * cache lives with the returned plan (the q88 convenience pattern).
     * CALLER-CLEARS contract: a long-lived session issuing many
-    * invocations should `spark.catalog.clearCache()` between them (the
-    * Bench protocol does) — the blocks are otherwise reclaimed only by
-    * driver GC through the ContextCleaner. The same applies to the
+    * invocations should `spark.catalog.clearCache()` between them —
+    * the blocks are otherwise reclaimed only by driver GC through the
+    * ContextCleaner. The same applies to the
     * localCheckpoint blocks in bm25TopK/bigramSurprisal, which are
     * deliberately bounded to TYPE-table size, never the corpus. */
   private[ops] def tfidfWeights(df: DataFrame, id: String,

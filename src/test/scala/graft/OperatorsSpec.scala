@@ -171,24 +171,25 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("signature-store bucket writes are file-count bounded per batch") {
-    // A batch's band postings are plain parquet files under its
-    // batch= directory (band is a data column), clustered by a doc_id
-    // hash before the write, so a small batch lands as a few files
-    // however many tasks computed its signatures — after the commit
-    // and after an erase rewrites the batch.
+    // Both sides of a batch (its band postings and its shingle arrays)
+    // are plain parquet files under their batch= directories (band is a
+    // data column), clustered by a doc_id hash before the write, so a
+    // small batch lands as a few files however many tasks computed its
+    // signatures — after the commit and after an erase rewrites the
+    // batch.
     val dir = java.nio.file.Files.createTempDirectory("graft-sig-files").toString
     val docs = spark.range(400).select(col("id").as("doc_id"),
       concat(lit("alpha beta gamma delta epsilon zeta eta theta doc "),
         col("id")).as("text"))
       .repartition(16) // many input tasks: the unclustered worst case
     Dedup.writeSignatureStore(docs, "doc_id", "text", s"$dir/store")
-    def assertBounded(when: String): Unit = {
-      val entries = new java.io.File(s"$dir/store/buckets/batch=init").listFiles()
+    def assertBounded(when: String): Unit = for (side <- Seq("buckets", "arrays")) {
+      val entries = new java.io.File(s"$dir/store/$side/batch=init").listFiles()
       assert(!entries.exists(f => f.isDirectory && f.getName.startsWith("band=")),
-        s"$when: band= directories under the batch")
+        s"$when: band= directories under the $side batch")
       val nFiles = entries.count(_.getName.endsWith(".parquet"))
       assert(nFiles >= 1 && nFiles < 16,
-        s"$when: $nFiles parquet files for 16 input partitions")
+        s"$when: $nFiles $side parquet files for 16 input partitions")
     }
     assertBounded("after the commit")
     val erased = spark.range(0, 400, 7).toDF("doc_id")
@@ -6600,7 +6601,7 @@ class OperatorsSpec extends SparkSpec {
     assert(Similarity.readNswParams(spark, v2dir).isDefined,
       "delete must carry the store's params manifest")
     // version-level idempotence: an already-erased set publishes
-    // nothing (Bench re-runs resolve the same version)
+    // nothing (re-runs resolve the same version)
     val v3dir = Similarity.deleteFromNswStore(spark, root, odd, "vec_id")
     assert(v3dir == v2dir, "re-delete must hit the no-op fast path")
     assert(graft.sources.VersionedStore.latestVersion(spark, root) == 2,

@@ -156,7 +156,7 @@ class PropertySpec extends AnyFunSuite {
 
   test("routed entries recover the truth component the fixed-entry " +
        "walk provably loses on a two-cluster corpus") {
-    // The r16 AnnDecade clustered finding in miniature: queries sit
+    // The round-16 clustered-corpus finding in miniature: queries sit
     // BETWEEN two tight clusters, so their exact top-10 splits across
     // both — but every corpus node's own top-M list is strictly
     // intra-cluster (the gap dwarfs the intra spread), so NN-Descent
