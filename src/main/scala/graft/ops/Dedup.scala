@@ -205,38 +205,72 @@ object Dedup {
     * rounds. Verified star pairs keep every hot near-dup cluster
     * connected, so clustering (q55/q84 keep-best) is unaffected; only
     * the explicit pair LIST within a hot cluster is thinned — exactly
-    * the part that would be quadratic to materialize anyway. Both
-    * branches reuse ONE shuffle on (band, bh): the width count and the
-    * star hub are window functions over the same hash partitioning. */
+    * the part that would be quadratic to materialize anyway. The
+    * candidates come from [[bucketCandidates]] with every posting
+    * marked new, so the MinHash pass and the (band, bh) shuffle run
+    * once for both branches. That window job runs when this method is
+    * called; the verification stays lazy. */
   def minhashLshPairs(corpus: DataFrame, id: String, text: String,
                       tau: Double, k: Int = 3,
                       perms: Int = MinhashPerms,
                       bands: Int = LshBands,
                       maxBucket: Int = MaxBucketWidth): DataFrame = {
     val arrs = shingleArrays(corpus, id, text, k).cache()
-    val candidates = selfCandidates(bandBuckets(arrs, perms, bands), maxBucket)
-      .distinct()
-    verifyPairs(candidates, arrs, tau)
+    val post = bandBuckets(arrs, perms, bands).withColumn("is_new", lit(true))
+    verifyPairs(bucketCandidates(post, maxBucket), arrs, tau)
   }
 
-  /** Width-capped candidate pairs from a (doc_id, band, bh) bucket
-    * table: all-pairs within cold buckets, spanning star at the min id
-    * for hot ones. One shuffle on (band, bh); the width count and star
-    * hub are window functions over the same hash partitioning. */
-  private def selfCandidates(bk: DataFrame, maxBucket: Int): DataFrame = {
+  /** The one width-capped candidate rule over band postings
+    * (doc_id, band, bh, is_new): distinct (doc_a < doc_b) pairs with at
+    * least one new side. `is_new` marks the batch being deduped; the
+    * other rows are the store it is deduped against (none in a
+    * whole-corpus pass). Per (band, bh) bucket and per side, a width
+    * above `maxBucket` makes that side hot:
+    * - a new doc pairs with the hub (min id) of a hot store side, and
+    *   with the hub of a hot new side;
+    * - a new doc pairs with every doc of a cold side in its bucket
+    *   (store docs, and new docs with a larger id).
+    * One window over one shuffle on (band, bh) computes both sides'
+    * widths and hubs. Its result is cut to the rows the pairs need (the
+    * new rows, and the store rows of cold buckets: a hot store bucket's
+    * postings never reach a join, its hub travels on each new row) and
+    * materialized by `localCheckpoint` when called, so the shuffle and
+    * the MinHash pass above it run once.
+    *
+    * Why materialize after the shuffle: in Spark 4.1 AQE never
+    * reuses an exchange whose subtree scans a cached relation or a
+    * checkpoint, so three lazy branches over one windowed table would
+    * each re-run its shuffle. The checkpoint does not carry the
+    * window's (band, bh) partitioning into later plans, so the cold join
+    * is planned like any join of two small-or-large tables (at request
+    * size a broadcast of the new rows); either way it reads the
+    * materialized rows and never re-runs the window. */
+  private def bucketCandidates(post: DataFrame, maxBucket: Int): DataFrame = {
     val byBucket = Window.partitionBy(col("band"), col("bh"))
-    val buckets = bk.withColumn("width", count(lit(1)).over(byBucket))
-    val cold = buckets.filter(col("width") <= maxBucket)
-      .select(col("doc_id"), col("band"), col("bh"))
-    val coldPairs = cold.as("a").join(cold.as("b"),
+    def hub(isNew: Boolean): Column = {
+      val side = when(col("is_new") === isNew, col("doc_id"))
+      when(count(side).over(byBucket) > maxBucket, min(side).over(byBucket))
+    }
+    val rows = post
+      .select(col("doc_id"), col("band"), col("bh"), col("is_new"),
+        hub(isNew = false).as("s_hub"), hub(isNew = true).as("n_hub"))
+      .filter(col("is_new") || col("s_hub").isNull)
+      .localCheckpoint()
+    val fresh = rows.filter(col("is_new"))
+    def pair(a: Column, b: Column): DataFrame = fresh
+      .filter(a =!= b) // null for a cold side: no star pair
+      .select(least(a, b).as("doc_a"), greatest(a, b).as("doc_b"))
+    val cold = rows.filter(!col("is_new") || col("n_hub").isNull)
+    val coldPairs = fresh.as("a").join(cold.as("b"),
         col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-    val hotPairs = buckets.filter(col("width") > maxBucket)
-      .withColumn("hub", min(col("doc_id")).over(byBucket))
-      .filter(col("doc_id") =!= col("hub"))
-      .select(col("hub").as("doc_a"), col("doc_id").as("doc_b"))
-    coldPairs.unionAll(hotPairs)
+        (col("a.doc_id") < col("b.doc_id") ||
+          !col("b.is_new") && col("a.doc_id") > col("b.doc_id")))
+      .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
+        greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"))
+    pair(col("s_hub"), col("doc_id"))
+      .unionAll(pair(col("n_hub"), col("doc_id")))
+      .unionAll(coldPairs)
+      .distinct()
   }
 
   /** Containment near-dup pairs: overlap / min(|A|, |B|) ≥ tau — the
@@ -569,10 +603,10 @@ object Dedup {
     // re-run's affected scan finds nothing) cannot leak erased bytes.
     Option(fs.globStatus(new org.apache.hadoop.fs.Path(s"$path/.stage-*")))
       .getOrElse(Array.empty).foreach(st => fs.delete(st.getPath, true))
-    val affected = s.read.parquet(s"$path/arrays")
-      .join(del, Seq("doc_id"), "left_semi")
-      .select(col("batch").cast("string")).distinct()
-      .collect().map(_.getString(0)) // bounded: one tag per stored batch
+    val affected = storeSide(s, s"$path/arrays").fold(Array.empty[String])(
+      _.join(del, Seq("doc_id"), "left_semi")
+        .select(col("batch")).distinct()
+        .collect().map(_.getString(0))) // bounded: one tag per stored batch
     if (affected.isEmpty) return 0
     val token = java.util.UUID.randomUUID().toString.take(12)
     val stage = s"$path/.stage-$token" // dot-prefixed: invisible to reads
@@ -639,10 +673,11 @@ object Dedup {
                        perms: Int = MinhashPerms,
                        bands: Int = LshBands,
                        maxBucket: Int = MaxBucketWidth): DataFrame = {
-    // Convenience wrapper: the caches live as long as the returned plan
-    // (fine for one-shot batch use). A long-running caller issuing many
-    // batches — the streaming path — must use incrementalPairsFrom and
-    // unpersist after each batch's actions.
+    // Convenience wrapper for one-shot batch use: its two caches stay in
+    // the CacheManager until unpersisted or the session ends. A
+    // long-running caller issuing many batches — the streaming path —
+    // must use incrementalPairsFrom and unpersist after each batch's
+    // actions.
     val newArrs = shingleArrays(newBatch, id, text, k).cache()
     val newBk = bandBuckets(newArrs, perms, bands).cache()
     incrementalPairsFrom(newArrs, newBk, storePath, tau, maxBucket)
@@ -662,46 +697,63 @@ object Dedup {
     * read identical to the first attempt — idempotence restored.
     *
     * A store with no `buckets/` yet (the first micro-batch of a stream
-    * on a fresh path) is an empty store: the batch's within-batch pairs,
-    * verified against its own arrays. */
+    * on a fresh path) is an empty store side: the batch's within-batch
+    * pairs, verified against its own arrays.
+    *
+    * Only the store buckets the batch touches are windowed: the store's
+    * postings are left-semi-joined to the batch's (band, bh) keys (a
+    * broadcast) before [[bucketCandidates]]. Every posting of a touched
+    * bucket survives that join, so each bucket's store width and hub
+    * are the whole store's; the scan stays O(store), the shuffle and the
+    * window are O(touched buckets). The window job runs when this
+    * method is called, so the store's postings are read at call time;
+    * its arrays are read when the result is evaluated. */
   def incrementalPairsFrom(newArrs: DataFrame, newBk: DataFrame,
                            storePath: String, tau: Double,
                            maxBucket: Int = MaxBucketWidth,
                            excludeBatch: Option[String] = None): DataFrame = {
     val s = newArrs.sparkSession
-    val within = selfCandidates(newBk, maxBucket)
-    val bucketsDir = new org.apache.hadoop.fs.Path(s"$storePath/buckets")
-    if (!bucketsDir.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .exists(bucketsDir))
-      return verifyPairs(within.distinct(), newArrs, tau)
-    def dropOwn(df: DataFrame): DataFrame =
-      excludeBatch.fold(df)(tag => df.filter(col("batch") =!= lit(tag)))
-    val storeBk = dropOwn(s.read.parquet(s"$storePath/buckets"))
-      .select(col("doc_id").as("store_id"), col("band"), col("bh"))
-    val storeArrs = dropOwn(s.read.parquet(s"$storePath/arrays"))
-      .select(col("doc_id"), col("sh_arr"), col("n"))
-    // ONE scan + shuffle of the (large, growing) store buckets: width
-    // and hub ride the same (band, bh) window partitioning. Hot buckets
-    // collapse to one distinct hub row BEFORE joining the batch, so the
-    // join never fans a new doc out across a hot bucket's postings; the
-    // cold side joins postings directly.
-    val byBucket = Window.partitionBy(col("band"), col("bh"))
-    val sized = storeBk
-      .withColumn("s_width", count(lit(1)).over(byBucket))
-      .withColumn("s_hub", min(col("store_id")).over(byBucket))
-    val hotCross = sized.filter(col("s_width") > maxBucket)
-      .select(col("band"), col("bh"), col("s_hub")).distinct()
-      .join(newBk, Seq("band", "bh"))
-      .filter(col("s_hub") =!= col("doc_id"))
-      .select(least(col("s_hub"), col("doc_id")).as("doc_a"),
-              greatest(col("s_hub"), col("doc_id")).as("doc_b"))
-    val coldCross = sized.filter(col("s_width") <= maxBucket)
-      .join(newBk, Seq("band", "bh"))
-      .filter(col("store_id") =!= col("doc_id"))
-      .select(least(col("store_id"), col("doc_id")).as("doc_a"),
-              greatest(col("store_id"), col("doc_id")).as("doc_b"))
-    val candidates = hotCross.unionAll(coldCross).unionAll(within).distinct()
-    verifyPairs(candidates, storeArrs.unionByName(newArrs), tau)
+    def stored(side: String): Option[DataFrame] =
+      storeSide(s, s"$storePath/$side").map(df =>
+        excludeBatch.fold(df)(tag => df.filter(col("batch") =!= lit(tag))))
+    val fresh = newBk.select(col("doc_id"), col("band"), col("bh"),
+      lit(true).as("is_new"))
+    val post = stored("buckets").fold(fresh)(_
+      .join(broadcast(newBk.select(col("band"), col("bh"))), Seq("band", "bh"),
+        "left_semi")
+      .select(col("doc_id"), col("band"), col("bh"), lit(false).as("is_new"))
+      .unionByName(fresh))
+    val arrs = stored("arrays").fold(newArrs)(
+      _.select(col("doc_id"), col("sh_arr"), col("n")).unionByName(newArrs))
+    verifyPairs(bucketCandidates(post, maxBucket), arrs, tau)
+  }
+
+  /** One side of the signature store (`arrays/` or `buckets/`) as a
+    * table with an explicit schema, or None while the side holds no
+    * parquet file. The data columns' types come from one footer read in
+    * the calling process — the same single footer Spark's non-merging
+    * schema inference reads, without that inference's Spark job — and `batch`
+    * is typed as a string, so a tag like `01` reads back as written
+    * (inference would read it as the int 1). Types are never taken from
+    * the caller's batch: a store with long ids read as int fails. */
+  private def storeSide(s: SparkSession, dir: String): Option[DataFrame] = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.execution.datasources.parquet._
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val conf = s.sparkContext.hadoopConfiguration
+    val parts = new Path(s"$dir/batch=*/part-*.parquet")
+    Option(parts.getFileSystem(conf).globStatus(parts))
+      .flatMap(_.sortBy(_.getPath.toString).headOption).map { file =>
+      val footer = ParquetFooterReader.readFooter(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, conf),
+        org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      val data = ParquetFileFormat.readSchemaFromFooter(
+        new org.apache.parquet.hadoop.Footer(file.getPath, footer),
+        new ParquetToSparkSchemaConverter(org.apache.spark.sql.internal.SQLConf.get))
+      s.read.schema(StructType(data.fields.map(_.copy(nullable = true)) :+
+          StructField("batch", StringType)))
+        .parquet(dir)
+    }
   }
 
   /** Hamming-≤-maxHamming pairs over ANY 64-bit signature column

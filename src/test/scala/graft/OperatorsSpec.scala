@@ -168,6 +168,52 @@ class OperatorsSpec extends SparkSpec {
     val wantWithin = (2001L until 2500L).map(b => (2000L, b)).toSet
     assert(got == wantCross ++ wantWithin,
       s"got ${got.size} pairs, want ${(wantCross ++ wantWithin).size}")
+    // A cold store bucket next to a hot batch bucket: 3 stored copies
+    // (ids 0..2) stay under the cap, so every batch copy pairs with each
+    // of them (30 cross pairs), while the 10 batch copies (ids 10..19)
+    // exceed it and star at batch hub 10 (9 pairs).
+    val coldStore = spark.range(3).select(col("id").as("doc_id"), boiler.as("text"))
+    val hotBatch = spark.range(10, 20).select(col("id").as("doc_id"), boiler.as("text"))
+    Dedup.writeSignatureStore(coldStore, "doc_id", "text", s"$dir/mixed")
+    val mixed = Dedup.incrementalPairs(hotBatch, "doc_id", "text", s"$dir/mixed",
+        0.6, maxBucket = 5)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val wantMixed = (for (a <- 0L until 3L; b <- 10L until 20L) yield (a, b)).toSet ++
+      (11L until 20L).map(b => (10L, b))
+    assert(mixed == wantMixed,
+      s"mixed: missing ${wantMixed -- mixed}; extra ${mixed -- wantMixed}")
+  }
+
+  test("a warm incremental-dedup request runs at most 8 Spark jobs") {
+    // The stream-retry shape: the batch's arrays and buckets are cached,
+    // already committed under their own tag, and scored against the store
+    // without that tag. The pairs must equal q51's pairs touching the batch.
+    val docs = Tables.documents(spark, sf)
+    val path = java.nio.file.Files.createTempDirectory("graft-inc-jobs").toString + "/store"
+    Dedup.writeSignatureStore(docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", path)
+    val arrs = Dedup.shingleArrays(docs.filter(col("doc_id") % 2 === 1), "doc_id", "text")
+      .cache()
+    val bk = Dedup.signatureBuckets(arrs).cache()
+    try {
+      Dedup.writeSignatureStoreFrom(arrs, path, "churn", buckets = Some(bk))
+      def request() = Dedup.incrementalPairsFrom(arrs, bk, path, 0.6,
+          excludeBatch = Some("churn"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      val cold = request()
+      val sc = spark.sparkContext
+      val group = s"warm-incremental-dedup-${System.nanoTime()}"
+      sc.setJobGroup(group, "warm incremental dedup")
+      val warm = try request() finally sc.clearJobGroup()
+      org.apache.spark.ListenerBusDrain(sc)
+      val jobs = sc.statusTracker.getJobIdsForGroup(group)
+      info(s"warm incremental-dedup request: ${jobs.length} Spark jobs")
+      assert(jobs.length <= 8, s"a warm request ran ${jobs.length} Spark jobs")
+      val whole = Dedup.q51(spark, sf).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+        .filter(p => p._1 % 2 == 1 || p._2 % 2 == 1).toSet
+      assert(warm == cold && warm == whole,
+        s"missing: ${(whole -- warm).take(3)}; extra: ${(warm -- whole).take(3)}")
+    } finally { bk.unpersist(); arrs.unpersist() }
   }
 
   test("signature-store bucket writes are file-count bounded per batch") {
@@ -6030,6 +6076,30 @@ class OperatorsSpec extends SparkSpec {
         s"missing=${expected -- got}")
     got.foreach { case (a, b) =>
       assert(a % 4 != 0 && b % 4 != 0, s"erased id in pair ($a,$b)") }
+  }
+
+  test("signature-store erasure finds batches tagged 01 and 02 by their written tags") {
+    import org.apache.spark.sql.functions.col
+    // With every tag numeric-looking, partition inference would read
+    // batch=01 as the int 1 and send the erase to a batch=1 directory
+    // that does not exist, leaving the erased ids on disk.
+    val docs = Tables.documents(spark, sf)
+    val path = java.nio.file.Files
+      .createTempDirectory("graft-sigdel-tag").toString + "/store"
+    Dedup.writeSignatureStore(docs.filter(col("doc_id") % 2 === 0),
+      "doc_id", "text", path, batchTag = "01")
+    Dedup.writeSignatureStore(docs.filter(col("doc_id") % 2 === 1),
+      "doc_id", "text", path, batchTag = "02")
+    val del = docs.filter(col("doc_id") % 3 === 0)
+    assert(Dedup.deleteFromSignatureStore(spark, path, del, "doc_id") == 2)
+    for (side <- Seq("arrays", "buckets"); tag <- Seq("01", "02")) {
+      val ids = spark.read.parquet(s"$path/$side/batch=$tag")
+        .select("doc_id").collect().map(_.getLong(0))
+      assert(ids.nonEmpty && ids.forall(_ % 3 != 0),
+        s"erased id survived in $side/batch=$tag")
+    }
+    assert(!new java.io.File(s"$path/arrays/batch=1").exists &&
+      !new java.io.File(s"$path/buckets/batch=1").exists)
   }
 
   test("signature-store erasure crash windows: a kill during staging " +
