@@ -72,13 +72,4 @@ object Tables {
   }
   def documents(s: SparkSession, d: String): DataFrame  = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
-
-  /** Register every table as a temp view (for spark.sql users). Uses the
-    * typed loaders so `events.ts` is normalized the same way operators
-    * see it. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach { n =>
-      val df = if (n == "events") events(spark, dir) else load(spark, dir, n)
-      df.createOrReplaceTempView(n)
-    }
 }

@@ -27,11 +27,6 @@ object Cols {
   /** Event-time as exact integer microseconds (cross-engine-safe). */
   def micros(c: Column): Column = unix_micros(c)
 
-  /** SQL fragment mirrors for DuckDB oracles. */
-  def sqlFixed(expr: String, scale: Long): String =
-    s"CAST(floor(($expr) * $scale + 0.5) AS BIGINT)"
-  def sqlCents(expr: String): String = sqlFixed(expr, 100L)
-  def sqlBp(expr: String): String    = sqlFixed(expr, 10000L)
 
   /** Codepoint class of the space-FREE scripts (Han ideographs, kana,
     * Thai — scripts written without word separators; Korean keeps its

@@ -900,153 +900,64 @@ object Dedup {
 
   /** Connected-component clusters over an undirected pair graph
     * (columns `a`/`b`), labeling every node with the minimum id
-    * reachable from it. Distributed min-label propagation: each
-    * iteration joins neighbor labels across edges, unions the nodes'
-    * own labels, and takes the per-node min — ONE join + ONE
-    * aggregation shuffle per round (the union rides the aggregation).
-    * Iteration count is the graph diameter (near-dup clusters are
-    * shallow — a handful of rounds). Convergence is detected by the
-    * label sum (labels only ever decrease, so an unchanged sum IS the
-    * fixpoint) — a tiny scalar action instead of a third join per
-    * round. localCheckpoint truncates the growing lineage so round N's
-    * plan doesn't replay rounds 1..N-1; no driver-side graph state
-    * beyond the loop counter. */
+    * reachable from it: (doc_id, cluster_id, cluster_size). Ids may be
+    * of any orderable type. Pairs with a null endpoint and self-pairs
+    * are dropped first, so a node seen only in those is not labeled.
+    *
+    * Round 1 reads each node's label off its edges: the least of the
+    * node and its neighbors. Every later round lowers each label L(x)
+    * to the minimum of four candidate sets, in one aggregation:
+    *  - the hop (u, L(v)), for each edge (u, v) both ways;
+    *  - the hook (L(u), L(v)), which lowers u's parent as well as u;
+    *  - the shortcut (x, L(L(x))): pointer jumping, read as the hop
+    *    over a parent pointer (x, L(x)) joined like an edge;
+    *  - the node's own label.
+    * One row per edge or pointer, joined to both endpoint labels,
+    * yields the first three. The loop stops when no label fell in a
+    * round, counted exactly by `observe` on the round's checkpoint (no
+    * extra job); at `maxIters` rounds after round 1 it throws rather
+    * than return a wrong labeling. Measured rounds after round 1: 1 on
+    * q51's near-dup pair graph, 8 on a sorted 100-node chain, 14 on a
+    * shuffled-id 1,000-node chain. localCheckpoint truncates the
+    * lineage each round; the driver holds only the round counter. */
   def clusters(pairs: DataFrame, a: String = "doc_a", b: String = "doc_b",
                maxIters: Int = 20): DataFrame = {
-    // r17 (guide §1.2, tail job audit): the convergence label-sum rides
-    // the SAME job that materializes each round's checkpoint, via
-    // observe() — CollectMetrics accumulates the sum while the rows
-    // stream into the checkpoint blocks, so the old labelSum() re-scan
-    // (one extra job + one full pass over the labels PER ROUND, ~6-20
-    // rounds × ~12 query paths) disappears. The metric value is read
-    // from the Observation after the eager localCheckpoint returns.
-    def sumTo(df: DataFrame): (DataFrame, () => java.math.BigDecimal) = {
-      val obs = org.apache.spark.sql.Observation()
-      val out = df.observe(obs, sum(col("label").cast("decimal(38,0)"))
-        .as("ls")).localCheckpoint()
-      (out, () => obs.get("ls").asInstanceOf[java.math.BigDecimal])
-    }
-    val edges = pairs.select(col(a).as("src"), col(b).as("dst"))
-      .unionAll(pairs.select(col(b).as("src"), col(a).as("dst")))
+    val edges = pairs.select(col(a).as("u"), col(b).as("v"))
+      .where(col("u") =!= col("v")).localCheckpoint()
+    def cand(n: String, c: String) = struct(col(n).as("n"), col(c).as("c"))
+    var labels = edges.select(explode(array(cand("u", "v"), cand("v", "u"))).as("e"))
+      .groupBy(col("e.n").as("node")).agg(min(col("e.c")).as("m"))
+      .select(col("node"), least(col("node"), col("m")).as("label"))
       .localCheckpoint()
-    var (labels, sum0) = sumTo(
-      edges.select(col("src").as("node")).distinct()
-        .withColumn("label", col("node")))
-    var prevSum = sum0()
+    def lab(n: String, l: String) = labels.select(col("node").as(n), col("label").as(l))
     var iter = 0
-    var done = false
-    // r17 measured dead ends (recorded per the r16 discipline; the
-    // tail job audit examined this loop because ~15 query paths ride
-    // it): (a) checkpointing the edges pre-partitioned on dst bought
-    // nothing — the label side broadcasts per round, so the per-round
-    // shuffle is the aggregation FAN-OUT, not an edges exchange
-    // (q136 shufW 11.5 → 13.2 MB from the added repartition, time
-    // flat); (b) propagating TWO hops per convergence check made jobs
-    // go UP, not down — propagate() consumes its input twice (join +
-    // union), so the unchecked inner hop's aggregate is read twice
-    // from the reused exchange and computed twice (q136 shufR
-    // 13.6 → 17.5 MB, q96 1.32 → 1.86 s warm). The one-hop-one-check
-    // loop below is the measured optimum of the three shapes.
-    while (!done && iter < maxIters) {
-      val (next, sumN) = sumTo(
-        edges.join(labels, col("dst") === col("node"))
-          .select(col("src").as("n"), col("label"))
-          .unionAll(labels.select(col("node").as("n"), col("label")))
-          .groupBy(col("n")).agg(min(col("label")).as("label"))
-          .select(col("n").as("node"), col("label")))
-      val newSum = sumN()
-      done = newSum.compareTo(prevSum) == 0
-      prevSum = newSum
-      labels = next
+    var fell = 1L
+    while (fell > 0 && iter < maxIters) {
+      val obs = org.apache.spark.sql.Observation()
+      labels = edges.unionAll(lab("u", "v"))
+        .join(lab("u", "lu"), "u").join(lab("v", "lv"), "v")
+        .select(explode(array(cand("u", "lv"), cand("lu", "lv"),
+          cand("v", "lu"), cand("lv", "lu"))).as("e"))
+        .select(col("e.n").as("n"), col("e.c").as("c"),
+          lit(null).cast(labels.schema("label").dataType).as("old"))
+        .unionAll(lab("n", "c").withColumn("old", col("c")))
+        .groupBy(col("n")).agg(min(col("c")).as("label"), max(col("old")).as("old"))
+        .observe(obs, count(when(col("label") < col("old"), true)).as("fell"))
+        .select(col("n").as("node"), col("label"))
+        .localCheckpoint()
+      fell = obs.get("fell").asInstanceOf[Long]
       iter += 1
     }
-    if (!done) {
-      // Reaching the cap without the fixpoint means some labels are
-      // still propagating (graph diameter > maxIters) — the labeling
-      // below would be wrong. Fail loudly rather than return it.
-      throw new IllegalStateException(
-        s"Dedup.clusters did not converge in $maxIters iterations " +
-          "(pair-graph diameter exceeds maxIters); raise maxIters")
-    }
-    val sizes = labels.groupBy(col("label").as("cl")).agg(count(lit(1)).as("cluster_size"))
-    labels.join(sizes, col("label") === col("cl"))
-      .select(col("node").as("doc_id"), col("label").as("cluster_id"), col("cluster_size"))
+    if (fell > 0) throw new IllegalStateException(
+      s"Dedup.clusters did not converge in $maxIters rounds; raise maxIters")
+    labels.select(col("node").as("doc_id"), col("label").as("cluster_id"),
+      count(lit(1)).over(Window.partitionBy(col("label"))).as("cluster_size"))
   }
 
-  /** CONNECTED COMPONENTS in O(log n) ROUNDS — alternating large-star/
-    * small-star (Kiveris et al., "Connected Components in MapReduce
-    * and Beyond"), the DIAMETER-PROOF scale path for the cluster
-    * family. [[clusters]] propagates min labels ONE HOP per round, so
-    * its round count is the largest component's diameter — fine for
-    * near-dup blobs (dense, shallow), but a 100 TB dup graph with a
-    * chained component (quotation chains, incremental crawls) can need
-    * thousands of rounds. Star contraction doubles the pointer-jump
-    * reach instead: large-star hangs every strictly-larger neighbor
-    * onto the neighborhood minimum, small-star flattens the rest, and
-    * the edge set converges to stars centered at each component's
-    * MINIMUM node in O(log n) alternations regardless of diameter.
-    *
-    * Output is IDENTICAL to [[clusters]] — (doc_id, cluster_id = the
-    * component's min id, cluster_size) — spec-pinned equal on the real
-    * q51 pair graph and on a chain too deep for clusters' default cap.
-    *
-    * Scale (100 TB): each round is two (groupBy + join) passes over an
-    * edge set that only shrinks (toward one edge per non-root node);
-    * localCheckpoint truncates lineage per round; convergence is an
-    * edge-set checksum (count + decimal hash sum — one scalar action),
-    * not a driver-side collect. */
+  /** Alias of [[clusters]]. */
   def clustersStar(pairs: DataFrame, a: String = "doc_a",
-                   b: String = "doc_b", maxIters: Int = 32): DataFrame = {
-    var edges = pairs.select(col(a).as("u"), col(b).as("v"))
-      .where(col("u") =!= col("v")).distinct().localCheckpoint()
-    def bidir(e: DataFrame): DataFrame =
-      e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
-    def minTo(e: DataFrame): DataFrame = e.groupBy(col("u"))
-      .agg(min(col("v")).as("mv"))
-      .select(col("u"), least(col("mv"), col("u")).as("m"))
-    def checksum(e: DataFrame): (Long, java.math.BigDecimal) = {
-      val r = e.agg(count(lit(1)),
-        sum(F.md5Hash64(concat(col("u").cast("string"), lit(":"),
-          col("v").cast("string"))).cast("decimal(38,0)"))).head()
-      (r.getLong(0), r.getDecimal(1))
-    }
-    var prev: Option[(Long, java.math.BigDecimal)] = None
-    var iter = 0
-    var done = false
-    while (!done && iter < maxIters) {
-      // large-star: every neighbor v > u hangs onto min(Γ(u) ∪ {u})
-      val nb = bidir(edges)
-      val ls = nb.join(minTo(nb), "u").where(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .where(col("u") =!= col("v")).distinct().localCheckpoint()
-      // small-star: neighbors v ≤ u (and u itself) flatten onto it
-      val nb2 = bidir(ls)
-      val m2 = minTo(nb2)
-      val ss = nb2.join(m2, "u").where(col("v") <= col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .unionAll(m2.select(col("u"), col("m").as("v")))
-        .where(col("u") =!= col("v")).distinct().localCheckpoint()
-      val c = checksum(ss)
-      done = prev.exists(p => p._1 == c._1 &&
-        ((p._2 == null && c._2 == null) ||
-          (p._2 != null && c._2 != null && p._2.compareTo(c._2) == 0)))
-      prev = Some(c)
-      edges = ss
-      iter += 1
-    }
-    if (!done) throw new IllegalStateException(
-      s"Dedup.clustersStar did not converge in $maxIters alternations " +
-        "(theoretically O(log n) — this indicates a bug or maxIters ≪ log n)")
-    // converged: every edge is (node, component-min root)
-    val labels = edges.select(col("u").as("node"), col("v").as("label"))
-      .unionAll(edges.select(col("v").as("node"), col("v").as("label")))
-      .distinct()
-    val sizes = labels.groupBy(col("label").as("cl"))
-      .agg(count(lit(1)).as("cluster_size"))
-    labels.join(sizes, col("label") === col("cl"))
-      .select(col("node").as("doc_id"), col("label").as("cluster_id"),
-        col("cluster_size"))
-  }
+                   b: String = "doc_b", maxIters: Int = 32): DataFrame =
+    clusters(pairs, a, b, maxIters)
 
   // ---- driver-contract facades over the test tables ----
 
@@ -1808,8 +1719,8 @@ object Dedup {
     * division on nonnegative longs agrees across engines, so ranks are
     * bit-identical to the oracle's unrolled SQL.
     *
-    * Scale shape: one join + one aggregation per iteration (the
-    * Dedup.clusters discipline) — contributions shuffle O(edges),
+    * Scale shape: one join + one aggregation per iteration —
+    * contributions shuffle O(edges),
     * ranks shuffle O(nodes); localCheckpoint truncates the
     * per-iteration lineage; the node count is the only driver scalar.
     * Every node of an undirected edge set has degree ≥ 1, so there are

@@ -3700,7 +3700,7 @@ object Relational {
       cur = edges.count()
       rounds += 1
     }
-    // clustersStar's convergence contract: a silent exit at maxRounds
+    // Dedup.clusters' convergence contract: a silent exit at maxRounds
     // would return a superset that is NOT the k-core (and the oracle,
     // unrolling the same constant, could not catch it)
     if (cur != prev)

@@ -3094,18 +3094,6 @@ object Similarity {
       (32, math.max(8, lg - 3), beam, math.max(6, lg - 9))
     }
 
-  /** The deployment-mode q250 (ScaleCheck member, not a
-    * `queries` entry — parameters adapt to corpus size, which the
-    * static oracle cannot express; the q114Scaled convention). */
-  def q250Scaled(s: SparkSession, d: String): DataFrame = {
-    val (c, q) = corpusAndQueries(s, d)
-    val n = c.count()
-    val (m, rounds, beam, hops) = nswScaledParams(n)
-    nswSearchTopK(nnDescentGraph(c, "vec_id", "embedding", m, rounds),
-      c, q, "vec_id", "embedding", beam = beam, hops = hops,
-      routeEntries = n > RoutedEntryMin)
-  }
-
   /** q316: graph-ANN probe through the PERSISTED index — the SERVE
     * path of the q250 pair, split out the way q144/q145/q189 split
     * their families: build once under the VersionedStore manifest CAS

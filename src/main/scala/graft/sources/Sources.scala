@@ -48,9 +48,6 @@ object Sources {
     codec.fold(w)(c => w.option("compression", c)).json(path)
   }
 
-  /** One line per row; the lightest-weight corpus interchange format. */
-  def textLines(s: SparkSession, path: String): DataFrame = s.read.text(path)
-
   // ---- Packed token shards (trainer-facing binary sink) ----
 
   /** Completion marker dropped at the shard-store root after the last
@@ -177,10 +174,6 @@ object Sources {
       .select(col("bucket"), col("bin_id"),
         col("off").cast("long").as("bin_offset"), col("token_id"))
   }
-
-  /** Opaque binary payloads (images/audio/video) + file metadata. */
-  def binaryFiles(s: SparkSession, path: String): DataFrame =
-    s.read.format("binaryFile").load(path)
 
   // ---- Avro (container files) ----
   //

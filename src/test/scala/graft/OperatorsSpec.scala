@@ -3342,7 +3342,7 @@ class OperatorsSpec extends SparkSpec {
     assert(Relational.kCore(cycle, "a", "b", 2).collect()
       .forall(_.getLong(1) == 2L))
     // convergence contract: a peel cut off by maxRounds must THROW
-    // (clustersStar's rule), never return the not-yet-core superset —
+    // (Dedup.clusters' rule), never return the not-yet-core superset —
     // a 12-node path at k=2 erodes one node per end per round, so 2
     // rounds cannot reach the (empty) fixpoint
     val longPath = (1L until 12L).map(i => (i, i + 1)).toDF("a", "b")
@@ -4816,25 +4816,79 @@ class OperatorsSpec extends SparkSpec {
 
   test("clustersStar: log-round components match clusters() and survive deep chains") {
     import SparkTestSession.spark.implicits._
-    // a 100-node chain: diameter 99 — clusters() at its default 20-round
-    // cap MUST refuse; star contraction converges in O(log n)
+    // a 100-node chain: diameter 99, far past the default 20-round cap
+    // of one-hop propagation
     val chain = (0L until 99L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    intercept[IllegalStateException] { Dedup.clusters(chain).count() }
+    val rooted = Dedup.clusters(chain).collect()
+    assert(rooted.length == 100 &&
+      rooted.forall(r => r.getLong(1) == 0L && r.getLong(2) == 100L),
+      "clusters: one component rooted at the minimum id")
+    // a cap too small for the chain still fails loudly
+    intercept[IllegalStateException] { Dedup.clusters(chain, maxIters = 3).count() }
+    // a 1,000-node chain whose ids are shuffled along it
+    val ids = new scala.util.Random(4817).shuffle((0L until 1000L).toVector)
+    val shuffled = ids.zip(ids.tail).toDF("doc_a", "doc_b")
+    val sh = Dedup.clusters(shuffled).collect()
+    assert(sh.length == 1000 &&
+      sh.forall(r => r.getLong(1) == 0L && r.getLong(2) == 1000L),
+      "shuffled-id chain: one component rooted at 0")
     val starred = Dedup.clustersStar(chain).collect()
     assert(starred.length == 100 &&
       starred.forall(r => r.getLong(1) == 0L && r.getLong(2) == 100L),
       "one component rooted at the minimum id")
-    // two components + self-pair noise
-    val two = Seq((1L, 2L), (2L, 3L), (7L, 8L), (5L, 5L)).toDF("doc_a", "doc_b")
-    val t = Dedup.clustersStar(two).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    assert(t == Map(1L -> ((1L, 3L)), 2L -> ((1L, 3L)), 3L -> ((1L, 3L)),
-      7L -> ((7L, 2L)), 8L -> ((7L, 2L))), s"$t")
-    // identical to the one-hop propagation on the REAL q51 pair graph
+    // two components + self-pair and null-endpoint noise
+    val two = Seq((1L, Some(2L)), (2L, Some(3L)), (7L, Some(8L)), (5L, Some(5L)),
+      (2L, None)).toDF("doc_a", "doc_b")
+    for (cc <- Seq(Dedup.clustersStar(two), Dedup.clusters(two))) {
+      val t = cc.collect()
+        .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+      assert(t == Map(1L -> ((1L, 3L)), 2L -> ((1L, 3L)), 3L -> ((1L, 3L)),
+        7L -> ((7L, 2L)), 8L -> ((7L, 2L))), s"$t")
+    }
+    // any orderable id type: string ids label by their minimum string
+    val named = Seq(("b", "a"), ("c", "b"), ("x", "y")).toDF("doc_a", "doc_b")
+    val n = Dedup.clusters(named).collect()
+      .map(r => r.getString(0) -> ((r.getString(1), r.getLong(2)))).toMap
+    assert(n == Map("a" -> (("a", 3L)), "b" -> (("a", 3L)), "c" -> (("a", 3L)),
+      "x" -> (("x", 2L)), "y" -> (("x", 2L))), s"$n")
+    // the alias labels the REAL q51 pair graph as clusters() does
     val pairs = Dedup.q51(spark, sf).select(col("doc_a"), col("doc_b"))
     val viaProp = Dedup.clusters(pairs).collect().map(_.toSeq).toSet
     val viaStar = Dedup.clustersStar(pairs).collect().map(_.toSeq).toSet
     assert(viaStar == viaProp, "star and propagation label identically")
+  }
+
+  test("a shallow pair graph clusters in at most 11 Spark jobs") {
+    // q51's pair graph (near-dup blobs a hop or two across), materialized
+    // first so only the clustering's own jobs are counted
+    val pairs = Dedup.q51(spark, sf).select(col("doc_a"), col("doc_b"))
+      .localCheckpoint()
+    def run() = Dedup.clusters(pairs).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val cold = run()
+    val sc = spark.sparkContext
+    val group = s"shallow-clusters-${System.nanoTime()}"
+    sc.setJobGroup(group, "warm clusters")
+    val warm = try run() finally sc.clearJobGroup()
+    org.apache.spark.ListenerBusDrain(sc)
+    val jobs = sc.statusTracker.getJobIdsForGroup(group)
+    info(s"warm clusters on q51 pairs: ${jobs.length} Spark jobs")
+    assert(jobs.length <= 11, s"clusters ran ${jobs.length} Spark jobs")
+    // the same components from a driver-side union-find
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def root(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = root(p); parent(x) = r; r }
+    }
+    pairs.collect().foreach { r =>
+      val (x, y) = (root(r.getLong(0)), root(r.getLong(1)))
+      if (x != y) parent(math.max(x, y)) = math.min(x, y)
+    }
+    val nodes = parent.keys.toSeq
+    val size = nodes.groupBy(root).map { case (k, v) => k -> v.size.toLong }
+    val want = nodes.map(x => (x, root(x), size(root(x)))).toSet
+    assert(cold.nonEmpty && warm == cold && warm == want,
+      s"missing: ${(want -- warm).take(3)}; extra: ${(warm -- want).take(3)}")
   }
 
   test("q239 dhash: brightness-invariant gradient signs; corpus finds every planted pair") {
